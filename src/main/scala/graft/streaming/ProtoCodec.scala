@@ -1,10 +1,18 @@
 package graft.streaming
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.api.java.UDF1
-import org.apache.spark.sql.functions
+import java.nio.charset.StandardCharsets.UTF_8
+
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, ImplicitCastInputTypes, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Hand-rolled protobuf wire-format codec — the reference's ONLY
   * record format (its caller-supplied `Parser<T>`, KPW:85-89, applied
@@ -18,16 +26,17 @@ import org.apache.spark.sql.types._
   *  - unknown fields are skipped by wire type (forward compatibility);
   *  - repeated occurrences of a scalar field: last one wins;
   *  - a `required` field missing from the payload, a truncated varint
-  *    or length run, a wire-type mismatch on a known field, or a
-  *    deprecated group tag ⇒ the record is UNDECODABLE — the codec
-  *    returns a null struct, which [[Pipeline.start]] turns into the
-  *    reference's fail-stop (FailFast, KPW:272-277) or a dead-letter
-  *    row (DeadLetter), per policy;
+  *    or length run, a wire-type mismatch on a known field, a
+  *    deprecated group tag, or a malformed nested payload ⇒ the
+  *    record is UNDECODABLE — the codec returns a null struct, which
+  *    [[Pipeline.start]] turns into the reference's fail-stop
+  *    (FailFast, KPW:272-277) or a dead-letter row (DeadLetter), per
+  *    policy;
   *  - absent `optional` fields decode to null (matching what the
   *    reference's proto→parquet writer materializes).
   */
-// Serializable: descriptors are captured in executor-side closures
-// (the decode UDF); PMessage is a case CLASS, so without this Java
+// Serializable: descriptors travel to executors inside the decode
+// expression; PMessage is a case CLASS, so without this Java
 // serialization rejects the non-serializable superclass.
 sealed abstract class ProtoType(val wireType: Int, val sparkType: DataType)
   extends Serializable
@@ -56,8 +65,7 @@ object ProtoType {
     * sub-descriptor, recursively — the shape `ProtoWriteSupport`
     * handles transitively for the reference (SURVEY §1.2). */
   final case class PMessage(fields: Seq[ProtoField])
-    extends ProtoType(2, StructType(fields.map(f =>
-      StructField(f.name, f.dataType, nullable = true))))
+    extends ProtoType(2, ProtoCodec.schemaOf(fields))
 
   /** Proto3 `map<K,V>` (wire 2): on the wire it is a repeated
     * `entry { K key = 1; V value = 2; }` submessage — exactly the
@@ -84,26 +92,18 @@ object ProtoType {
       ProtoField(1, "key", keyType), ProtoField(2, "value", valueType))
   }
 
-  /** Proto3 default for an absent map entry key/value (protobuf-java
-    * never yields null from a map). */
+  /** Proto3 default for an absent map entry key/value, as a Catalyst
+    * value (protobuf-java never yields null from a map). */
   private[streaming] def defaultOf(t: ProtoType): Any = t match {
     case Int32 | UInt32 | SInt32 | Fixed32 | SFixed32 => 0
     case Int64 | UInt64 | SInt64 | Fixed64 | SFixed64 => 0L
     case Bool => false
     case PFloat => 0.0f
     case PDouble => 0.0d
-    case PString => ""
+    case PString => UTF8String.EMPTY_UTF8
     case PBytes => Array.empty[Byte]
-    case PMessage(sub) => Row.fromSeq(sub.map(_ => null))
-    case m: PMap => Map.empty[Any, Any]
-  }
-
-  /** Numeric/bool scalars may arrive PACKED (one wire-2 blob of
-    * concatenated payloads) when repeated — protobuf-java accepts
-    * packed and unpacked interchangeably, so the codec does too. */
-  def packable(t: ProtoType): Boolean = t match {
-    case PString | PBytes | _: PMessage | _: PMap => false
-    case _ => true
+    case PMessage(sub) => new GenericInternalRow(sub.length)
+    case _: PMap => ArrayBasedMapData(Array.empty[Any], Array.empty[Any])
   }
 }
 
@@ -127,215 +127,16 @@ final class ProtoDecodeException(msg: String) extends RuntimeException(msg)
   * on malformed input — the codec maps that to "undecodable". */
 object ProtoWire {
 
-  /** Read one base-128 varint starting at `pos`; returns (value, next
-    * position). Malformed when it overruns the buffer or exceeds the
-    * 10-byte maximum. */
-  def readVarint(b: Array[Byte], pos: Int): (Long, Int) = {
-    var v = 0L
-    var shift = 0
-    var p = pos
-    while (shift < 64) {
-      if (p >= b.length) throw new ProtoDecodeException(s"truncated varint at $pos")
-      val byte = b(p)
-      v |= (byte & 0x7fL) << shift
-      p += 1
-      if ((byte & 0x80) == 0) return (v, p)
-      shift += 7
-    }
-    throw new ProtoDecodeException(s"varint longer than 10 bytes at $pos")
-  }
-
-  private def readLittleEndian(b: Array[Byte], pos: Int, n: Int): (Long, Int) = {
-    if (pos + n > b.length) throw new ProtoDecodeException(s"truncated fixed$n at $pos")
-    var v = 0L
-    var i = n - 1
-    while (i >= 0) { v = (v << 8) | (b(pos + i) & 0xffL); i -= 1 }
-    (v, pos + n)
-  }
-
-  private def zigzag(v: Long): Long = (v >>> 1) ^ -(v & 1)
-
-  /** Read one length-delimited run header; returns (start, end). */
-  private def readLenRun(b: Array[Byte], pos: Int): (Int, Int) = {
-    val (len, p2) = readVarint(b, pos)
-    if (len < 0 || p2 + len > b.length)
-      throw new ProtoDecodeException(s"length $len overruns buffer at $p2")
-    (p2, p2 + len.toInt)
-  }
-
-  /** Read ONE value of `tpe` at `pos` on its native wire type;
-    * returns (value, next position). For [[ProtoType.PMessage]] the
-    * sub-record decodes recursively to a [[Row]] — a malformed nested
-    * payload fails the whole record, like protobuf-java's parser. */
-  private def readScalar(tpe: ProtoType, b: Array[Byte], pos: Int): (Any, Int) =
-    tpe.wireType match {
-      case 0 =>
-        val (v, p2) = readVarint(b, pos)
-        val value: Any = tpe match {
-          case ProtoType.Int32 | ProtoType.UInt32 => v.toInt
-          case ProtoType.Int64 | ProtoType.UInt64 => v
-          case ProtoType.SInt32 => zigzag(v).toInt
-          case ProtoType.SInt64 => zigzag(v)
-          case ProtoType.Bool => v != 0L
-          case t => throw new ProtoDecodeException(s"bad varint type $t")
-        }
-        (value, p2)
-      case 1 =>
-        val (v, p2) = readLittleEndian(b, pos, 8)
-        val value: Any = tpe match {
-          case ProtoType.PDouble => java.lang.Double.longBitsToDouble(v)
-          case _ => v
-        }
-        (value, p2)
-      case 2 =>
-        val (start, end) = readLenRun(b, pos)
-        val value: Any = tpe match {
-          case ProtoType.PString =>
-            new String(b, start, end - start, java.nio.charset.StandardCharsets.UTF_8)
-          case ProtoType.PMessage(sub) =>
-            Row.fromSeq(decode(sub, java.util.Arrays.copyOfRange(b, start, end))
-              .toIndexedSeq)
-          case _ => java.util.Arrays.copyOfRange(b, start, end)
-        }
-        (value, end)
-      case 5 =>
-        val (v, p2) = readLittleEndian(b, pos, 4)
-        val value: Any = tpe match {
-          case ProtoType.PFloat => java.lang.Float.intBitsToFloat(v.toInt)
-          case _ => v.toInt
-        }
-        (value, p2)
-      case w => throw new ProtoDecodeException(s"unsupported wire type $w")
-    }
-
-  /** Decode `bytes` against `fields` into column values ordered like
-    * the descriptor list (null = absent optional; absent repeated =
-    * empty array, protobuf's getList semantics). */
+  /** Decode `bytes` against `fields` into Scala column values ordered
+    * like the descriptor list (null = absent optional; absent repeated
+    * = empty array, protobuf's getList semantics): a nested message is
+    * a [[Row]], a repeated field a `Seq`, a map a `Map`. The same wire
+    * loop as [[ProtoDecode]], plus the Catalyst → Scala conversion the
+    * pipeline itself never pays. */
   def decode(fields: Seq[ProtoField], bytes: Array[Byte]): Array[Any] = {
-    val byNumber = fields.iterator.zipWithIndex
-      .map { case (f, i) => f.number -> ((f, i)) }.toMap
-    val out = new Array[Any](fields.length)
-    val rep = new Array[scala.collection.mutable.ArrayBuffer[Any]](fields.length)
-    val maps = new Array[scala.collection.mutable.LinkedHashMap[Any, Any]](fields.length)
-    fields.iterator.zipWithIndex.foreach { case (f, i) =>
-      if (f.repeated) rep(i) = scala.collection.mutable.ArrayBuffer.empty[Any]
-      f.tpe match {
-        case _: ProtoType.PMap =>
-          maps(i) = scala.collection.mutable.LinkedHashMap.empty[Any, Any]
-        case _ => ()
-      }
-    }
-    val seen = new Array[Boolean](fields.length)
-    var p = 0
-    while (p < bytes.length) {
-      val (tag, p1) = readVarint(bytes, p)
-      val fieldNum = (tag >>> 3).toInt
-      val wire = (tag & 7).toInt
-      if (fieldNum <= 0) throw new ProtoDecodeException(s"invalid field number $fieldNum")
-      byNumber.get(fieldNum) match {
-        case Some((f, i)) =>
-          if (f.repeated && ProtoType.packable(f.tpe) && wire == 2) {
-            // packed run: concatenated payloads under one wire-2 tag
-            val (start, end) = readLenRun(bytes, p1)
-            var q = start
-            while (q < end) {
-              val (v, q2) = readScalar(f.tpe, bytes, q)
-              if (q2 > end)
-                throw new ProtoDecodeException(
-                  s"packed ${f.name}: element overruns run end $end")
-              rep(i) += v
-              q = q2
-            }
-            p = end
-          } else {
-            if (wire != f.tpe.wireType)
-              throw new ProtoDecodeException(
-                s"field ${f.name}: wire type $wire, expected ${f.tpe.wireType}")
-            // value reads are INLINE (not via readScalar) on purpose:
-            // this loop is the per-record ingest hot path, and the
-            // (value, pos) tuple readScalar returns per field was
-            // measured as a double-digit-percent throughput hit on
-            // the pipeline bench
-            def store(v: Any): Unit =
-              if (f.repeated) rep(i) += v
-              else out(i) = v // repeated occurrence of a scalar: last wins
-            p = wire match {
-              case 0 =>
-                val (v, p2) = readVarint(bytes, p1)
-                store(f.tpe match {
-                  case ProtoType.Int32 | ProtoType.UInt32 => v.toInt
-                  case ProtoType.Int64 | ProtoType.UInt64 => v
-                  case ProtoType.SInt32 => zigzag(v).toInt
-                  case ProtoType.SInt64 => zigzag(v)
-                  case ProtoType.Bool => v != 0L
-                  case t => throw new ProtoDecodeException(s"bad varint type $t")
-                })
-                p2
-              case 1 =>
-                val (v, p2) = readLittleEndian(bytes, p1, 8)
-                store(f.tpe match {
-                  case ProtoType.PDouble => java.lang.Double.longBitsToDouble(v)
-                  case _ => v
-                })
-                p2
-              case 2 =>
-                val (start, end) = readLenRun(bytes, p1)
-                f.tpe match {
-                  case m: ProtoType.PMap =>
-                    // one map ENTRY submessage: { K key = 1; V value = 2 }.
-                    // Duplicate keys: last wins; absent key/value: proto3
-                    // default — protobuf-java's map merge semantics.
-                    val entry = decode(m.entryFields,
-                      java.util.Arrays.copyOfRange(bytes, start, end))
-                    val k = if (entry(0) == null) ProtoType.defaultOf(m.keyType)
-                            else entry(0)
-                    val v = if (entry(1) == null) ProtoType.defaultOf(m.valueType)
-                            else entry(1)
-                    maps(i).put(k, v)
-                  case ProtoType.PString =>
-                    store(new String(bytes, start, end - start,
-                      java.nio.charset.StandardCharsets.UTF_8))
-                  case ProtoType.PMessage(sub) =>
-                    store(Row.fromSeq(decode(sub,
-                      java.util.Arrays.copyOfRange(bytes, start, end)).toIndexedSeq))
-                  case _ =>
-                    store(java.util.Arrays.copyOfRange(bytes, start, end))
-                }
-                end
-              case 5 =>
-                val (v, p2) = readLittleEndian(bytes, p1, 4)
-                store(f.tpe match {
-                  case ProtoType.PFloat => java.lang.Float.intBitsToFloat(v.toInt)
-                  case _ => v.toInt
-                })
-                p2
-              case w => throw new ProtoDecodeException(s"unsupported wire type $w")
-            }
-          }
-          seen(i) = true
-        case None =>
-          // unknown field: skip by wire type (groups 3/4 unsupported)
-          p = wire match {
-            case 0 => readVarint(bytes, p1)._2
-            case 1 => readLittleEndian(bytes, p1, 8)._2
-            case 2 => readLenRun(bytes, p1)._2
-            case 5 => readLittleEndian(bytes, p1, 4)._2
-            case w => throw new ProtoDecodeException(s"unsupported wire type $w")
-          }
-      }
-    }
-    fields.iterator.zipWithIndex.foreach { case (f, i) =>
-      if (f.required && !seen(i))
-        throw new ProtoDecodeException(s"missing required field ${f.name}")
-      if (f.repeated) out(i) = rep(i).toSeq
-      f.tpe match {
-        // absent map = empty map (protobuf getMap semantics, the
-        // sibling of absent-repeated = empty array above)
-        case _: ProtoType.PMap => out(i) = maps(i).toMap
-        case _ => ()
-      }
-    }
-    out
+    val values = new WireDecoder(fields).values(bytes, 0, bytes.length)
+    Array.tabulate(fields.length)(i =>
+      CatalystTypeConverters.convertToScala(values(i), fields(i).dataType))
   }
 
   // ---- encoder (tests + the oracle-gated roundtrip query) ----
@@ -419,29 +220,279 @@ object ProtoWire {
   }
 }
 
+/** Bounded read position over one message's bytes `b[pos, limit)`.
+  * Reads return plain values and advance `pos`, so a field read
+  * allocates nothing; every overrun is a [[ProtoDecodeException]]. */
+private final class WireCursor(val b: Array[Byte], var pos: Int, val limit: Int) {
+
+  /** One base-128 varint; malformed when it overruns the limit or
+    * exceeds the 10-byte maximum. */
+  def varint(): Long = {
+    val start = pos
+    var v = 0L
+    var shift = 0
+    while (shift < 64) {
+      if (pos >= limit) throw new ProtoDecodeException(s"truncated varint at $start")
+      val byte = b(pos)
+      pos += 1
+      v |= (byte & 0x7fL) << shift
+      if ((byte & 0x80) == 0) return v
+      shift += 7
+    }
+    throw new ProtoDecodeException(s"varint longer than 10 bytes at $start")
+  }
+
+  /** `n` little-endian bytes (fixed32/fixed64 payloads). */
+  def fixed(n: Int): Long = {
+    if (pos + n > limit) throw new ProtoDecodeException(s"truncated fixed$n at $pos")
+    var v = 0L
+    var i = n - 1
+    while (i >= 0) { v = (v << 8) | (b(pos + i) & 0xffL); i -= 1 }
+    pos += n
+    v
+  }
+
+  /** A length-delimited run header: returns the run's end and leaves
+    * `pos` at its start. */
+  def run(): Int = {
+    val len = varint()
+    if (len < 0 || pos + len > limit)
+      throw new ProtoDecodeException(s"length $len overruns buffer at $pos")
+    pos + len.toInt
+  }
+
+  /** Skip one value of an unknown field by wire type (groups 3/4 are
+    * unsupported). */
+  def skip(wire: Int): Unit = wire match {
+    case 0 => varint()
+    case 1 => fixed(8)
+    case 2 => pos = run()
+    case 5 => fixed(4)
+    case w => throw new ProtoDecodeException(s"unsupported wire type $w")
+  }
+}
+
+/** One descriptor level compiled for decoding. The field-number
+  * lookup and the nested levels (messages, map entries) are built
+  * once; each record is then one pass over its wire bytes that writes
+  * Catalyst values directly — `UTF8String`, `GenericArrayData`,
+  * `ArrayBasedMapData`, nested `InternalRow`. Decode semantics are the
+  * protobuf-java ones listed at the top of this file. */
+private[streaming] final class WireDecoder(fields: Seq[ProtoField]) extends Serializable {
+  import WireDecoder._
+
+  private val fs = fields.toArray
+  // field numbers ascending, and the descriptor index of each
+  private val index = fs.indices.sortBy(fs(_).number).toArray
+  private val numbers = index.map(fs(_).number)
+  private val nested: Array[WireDecoder] = fs.map(_.tpe match {
+    case ProtoType.PMessage(sub) => new WireDecoder(sub)
+    case m: ProtoType.PMap => new WireDecoder(m.entryFields)
+    case _ => null
+  })
+
+  def decode(b: Array[Byte], from: Int, until: Int): InternalRow =
+    new GenericInternalRow(values(b, from, until))
+
+  /** Column values of the message in `b[from, until)`, ordered like
+    * the descriptor list. While the loop runs, a repeated field's slot
+    * holds its element buffer and a map field's slot its entries. */
+  def values(b: Array[Byte], from: Int, until: Int): Array[Any] = {
+    val c = new WireCursor(b, from, until)
+    val out = new Array[Any](fs.length)
+    while (c.pos < until) {
+      val tag = c.varint()
+      val fieldNum = (tag >>> 3).toInt
+      val wire = (tag & 7).toInt
+      if (fieldNum <= 0) throw new ProtoDecodeException(s"invalid field number $fieldNum")
+      val k = java.util.Arrays.binarySearch(numbers, fieldNum)
+      if (k < 0) c.skip(wire) // unknown field (forward compatibility)
+      else {
+        val i = index(k)
+        val f = fs(i)
+        if (f.repeated) {
+          if (out(i) == null) out(i) = mutable.ArrayBuffer.empty[Any]
+          val buf = out(i).asInstanceOf[mutable.ArrayBuffer[Any]]
+          if (wire == 2 && f.tpe.wireType != 2) {
+            // packed run: numeric/bool payloads concatenated under one
+            // wire-2 tag; protobuf-java accepts packed and unpacked
+            // interchangeably, so the codec does too
+            val end = c.run()
+            val packed = new WireCursor(b, c.pos, end)
+            while (packed.pos < end) buf += value(i, packed)
+            c.pos = end
+          } else {
+            checkWire(f, wire)
+            buf += value(i, c)
+          }
+        } else {
+          checkWire(f, wire)
+          if (f.tpe.isInstanceOf[ProtoType.PMap]) {
+            if (out(i) == null) out(i) = mutable.LinkedHashMap.empty[Any, Any]
+            putEntry(i, c, out(i).asInstanceOf[mutable.LinkedHashMap[Any, Any]])
+          } else out(i) = value(i, c) // repeated scalar occurrence: last wins
+        }
+      }
+    }
+    var i = 0
+    while (i < fs.length) {
+      val f = fs(i)
+      // every decoded value is non-null, so null = never seen
+      if (f.required && out(i) == null)
+        throw new ProtoDecodeException(s"missing required field ${f.name}")
+      if (f.repeated) out(i) = out(i) match {
+        case null => new GenericArrayData(Array.empty[Any])
+        case buf: mutable.ArrayBuffer[Any @unchecked] => new GenericArrayData(buf.toArray)
+      }
+      else if (f.tpe.isInstanceOf[ProtoType.PMap]) out(i) = mapData(out(i))
+      i += 1
+    }
+    out
+  }
+
+  private def checkWire(f: ProtoField, wire: Int): Unit =
+    if (wire != f.tpe.wireType)
+      throw new ProtoDecodeException(
+        s"field ${f.name}: wire type $wire, expected ${f.tpe.wireType}")
+
+  /** One value of field `i` at the cursor, on its native wire type. */
+  private def value(i: Int, c: WireCursor): Any = fs(i).tpe match {
+    case ProtoType.Int32 | ProtoType.UInt32 => c.varint().toInt
+    case ProtoType.Int64 | ProtoType.UInt64 => c.varint()
+    case ProtoType.SInt32 => zigzag(c.varint()).toInt
+    case ProtoType.SInt64 => zigzag(c.varint())
+    case ProtoType.Bool => c.varint() != 0L
+    case ProtoType.Fixed64 | ProtoType.SFixed64 => c.fixed(8)
+    case ProtoType.PDouble => java.lang.Double.longBitsToDouble(c.fixed(8))
+    case ProtoType.Fixed32 | ProtoType.SFixed32 => c.fixed(4).toInt
+    case ProtoType.PFloat => java.lang.Float.intBitsToFloat(c.fixed(4).toInt)
+    case ProtoType.PString =>
+      val end = c.run()
+      val s = utf8(c.b, c.pos, end - c.pos)
+      c.pos = end
+      s
+    case ProtoType.PBytes =>
+      val end = c.run()
+      val v = java.util.Arrays.copyOfRange(c.b, c.pos, end)
+      c.pos = end
+      v
+    case _: ProtoType.PMessage =>
+      val end = c.run()
+      val v = nested(i).decode(c.b, c.pos, end)
+      c.pos = end
+      v
+    case _: ProtoType.PMap =>
+      throw new IllegalStateException(s"${fs(i).name}: map fields decode entry by entry")
+  }
+
+  /** One map ENTRY submessage `{ K key = 1; V value = 2 }`. Duplicate
+    * keys: last wins; absent key/value: proto3 default —
+    * protobuf-java's map merge semantics. Keys are held as Scala
+    * values, so the entry order is that of `LinkedHashMap.toMap`:
+    * payload order up to 4 keys, hash order beyond. */
+  private def putEntry(i: Int, c: WireCursor, m: mutable.LinkedHashMap[Any, Any]): Unit = {
+    val t = fs(i).tpe.asInstanceOf[ProtoType.PMap]
+    val end = c.run()
+    val e = nested(i).values(c.b, c.pos, end)
+    c.pos = end
+    val k = if (e(0) == null) ProtoType.defaultOf(t.keyType) else e(0)
+    m.put(k match {
+      case s: UTF8String => s.toString
+      case other => other
+    }, if (e(1) == null) ProtoType.defaultOf(t.valueType) else e(1))
+  }
+}
+
+private object WireDecoder {
+  private def zigzag(v: Long): Long = (v >>> 1) ^ -(v & 1)
+
+  /** Valid UTF-8 is taken as is; anything else decodes through
+    * `String` to the same replacement characters as
+    * `new String(_, UTF_8)`. */
+  private def utf8(b: Array[Byte], start: Int, len: Int): UTF8String = {
+    val s = UTF8String.fromBytes(b, start, len)
+    if (s.isValid) s else UTF8String.fromString(new String(b, start, len, UTF_8))
+  }
+
+  /** The entries in `LinkedHashMap.toMap` order, as Catalyst map data
+    * (an absent map is empty, protobuf's getMap semantics). */
+  private def mapData(entries: Any): ArrayBasedMapData = {
+    val m = entries match {
+      case null => Map.empty[Any, Any]
+      case lhm: mutable.LinkedHashMap[Any @unchecked, Any @unchecked] => lhm.toMap
+    }
+    val keys = new Array[Any](m.size)
+    val vals = new Array[Any](m.size)
+    var i = 0
+    m.foreach { case (k, v) =>
+      keys(i) = k match {
+        case s: String => UTF8String.fromString(s)
+        case other => other
+      }
+      vals(i) = v
+      i += 1
+    }
+    new ArrayBasedMapData(new GenericArrayData(keys), new GenericArrayData(vals))
+  }
+}
+
+/** `ProtoDecode(child, fields)`: protobuf wire bytes → a struct of the
+  * descriptor's columns, written straight as Catalyst values by one
+  * [[WireDecoder]] pass per record. Null input gives null, and the
+  * result is null iff the record is undecodable — the [[RecordCodec]]
+  * contract FailFast/DeadLetter key on. The decoder (field-number
+  * lookup and nested levels) is built once per expression instance. */
+case class ProtoDecode(child: Expression, fields: Seq[ProtoField])
+    extends UnaryExpression with ImplicitCastInputTypes {
+
+  override def inputTypes = Seq(BinaryType)
+  override lazy val dataType: DataType = ProtoCodec.schemaOf(fields)
+  override def nullable: Boolean = true
+  override def prettyName: String = "proto_decode"
+
+  @transient private lazy val decoder = new WireDecoder(fields)
+
+  def decodeOrNull(bytes: Array[Byte]): InternalRow =
+    try decoder.decode(bytes, 0, bytes.length)
+    catch { case _: ProtoDecodeException => null }
+
+  override protected def nullSafeEval(bytes: Any): Any =
+    decodeOrNull(bytes.asInstanceOf[Array[Byte]])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("protoDecode", this)
+    val in = child.genCode(ctx)
+    ev.copy(code = code"""
+      |${in.code}
+      |InternalRow ${ev.value} = ${in.isNull} ? null : $self.decodeOrNull(${in.value});
+      |boolean ${ev.isNull} = ${ev.value} == null;
+      |""".stripMargin)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): ProtoDecode =
+    copy(child = newChild)
+}
+
 /** Protobuf [[RecordCodec]] over a field-descriptor list (the generic
   * equivalent of supplying a `Parser<T>` to the reference's builder,
-  * KPW:683-687). Decode runs as one deserializer call per record —
-  * the same cost shape as `spark-protobuf`'s `from_protobuf`, which
-  * this swaps in for verbatim when the jar is available.
+  * KPW:683-687). Decode is the native [[ProtoDecode]] expression: it
+  * writes each record's Catalyst row directly, inside whole-stage
+  * codegen, with strings kept as their UTF-8 bytes.
   */
 final case class ProtoCodec(fields: Seq[ProtoField]) extends RecordCodec {
   require(fields.nonEmpty, "at least one field")
   require(fields.map(_.number).distinct.length == fields.length, "duplicate field numbers")
   require(fields.map(_.name).distinct.length == fields.length, "duplicate field names")
 
-  override val schema: StructType =
+  override val schema: StructType = ProtoCodec.schemaOf(fields)
+
+  override def decode(bytes: Column): Column =
+    Bridge.column(ProtoDecode(Bridge.expression(bytes), fields))
+}
+
+object ProtoCodec {
+  def schemaOf(fields: Seq[ProtoField]): StructType =
     StructType(fields.map(f => StructField(f.name, f.dataType, nullable = true)))
-
-  // null iff undecodable — the RecordCodec contract FailFast/DeadLetter key on
-  private val u = functions.udf(new UDF1[Array[Byte], Row] {
-    override def call(bytes: Array[Byte]): Row =
-      if (bytes == null) null
-      else try Row.fromSeq(ProtoWire.decode(fields, bytes).toIndexedSeq)
-      catch { case _: ProtoDecodeException => null }
-  }, schema)
-
-  override def decode(bytes: Column): Column = u(bytes)
 }
 
 /** The reference's test schema (test-message.proto:5-10): descriptor,

@@ -47,8 +47,8 @@ object ProtoParity {
     // the codec seam; the oracle recomputes every output from the raw
     // table, so a hash match proves ARRAY- and STRUCT-producing
     // decode paths are the identity per row. Scale shape: pure
-    // per-row map, zero exchanges — decode cost is the same
-    // one-deserializer-call-per-record as q81.
+    // per-row map, zero exchanges — decode is the same single
+    // ProtoDecode pass per record as q81, nested levels included.
     "q149_proto_nested_roundtrip" -> ((s, d) => {
       val fs = NestedDocProto.fields
       val enc = udf((id: Long, toks: Seq[String], lang: String, n: Long) =>

@@ -14,10 +14,13 @@ import scala.util.Try
   * [[DecodeErrorPolicy]]: FailFast reproduces the reference,
   * DeadLetter routes nulls to a quarantine output instead.
   *
-  * Codecs are pure `Column → Column` transforms so decode stays
-  * inside Catalyst codegen (no per-record JVM dispatch) — except
-  * [[TypedCodec]], the generic escape hatch for opaque binary
-  * formats, which pays the UDF cost by design.
+  * Codecs are pure `Column → Column` transforms, so decode is one
+  * expression in the micro-batch plan: [[JsonCodec]]/[[CsvCodec]] use
+  * Spark's own parsers and [[ProtoCodec]] its native `ProtoDecode`
+  * expression, all writing Catalyst rows directly. [[TypedCodec]],
+  * the generic escape hatch for opaque binary formats, pays the UDF
+  * cost by design: a Scala object per record, converted back to a
+  * Catalyst row.
   */
 sealed trait DecodeErrorPolicy
 object DecodeErrorPolicy {

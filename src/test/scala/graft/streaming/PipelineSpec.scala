@@ -443,4 +443,72 @@ class PipelineSpec extends AnyFunSuite {
     assert(back.count() == 100)
     assert(back.filter(col("query") === "b42" && col("timestamp") === 42L).count() == 1)
   }
+
+  test("proto decode plans as the native ProtoDecode below the single writer exchange") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.graftbridge.Bridge
+    val cfg = PipelineConfig(targetDir = tmp("graft-plan"), checkpointDir = tmp("graft-ckpt"),
+      maxFileOpenDuration = 1.second)
+    val stream = MemoryStream[Array[Byte]](8, spark, None)
+    stream.addData((0 until 50).map(i => SampleMessageProto.encode(s"q$i", i.toLong, i, null)))
+    val h = newPipeline(cfg).start(stream.toDF(), SampleMessageProto.codec)
+    val plan = try {
+      h.processAllAvailable()
+      Bridge.lastMicroBatchPlan(h.query).getOrElse(fail("no micro-batch executed"))
+    } finally h.stop()
+    // AdaptiveSparkPlanExec / QueryStageExec are leaves to TreeNode.collect
+    def flatten(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case o => o.children
+    }).flatMap(flatten)
+    def decodes(p: SparkPlan) =
+      p.expressions.exists(_.exists(_.isInstanceOf[ProtoDecode]))
+    val nodes = flatten(plan)
+    val exchanges = nodes.collect { case e: ShuffleExchangeExec => e }
+    assert(exchanges.length == 1, s"expected one writer exchange in:\n$plan")
+    assert(flatten(exchanges.head.child).exists(decodes),
+      s"ProtoDecode is not below the writer exchange in:\n$plan")
+    assert(!nodes.exists(_.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF]))),
+      s"a ScalaUDF is left on the decode path in:\n$plan")
+  }
+
+  test("FailFast mid-stream: a reader of targetDir sees exactly the batches before the bad one") {
+    import spark.implicits._
+    val out = tmp("graft-ff-mid")
+    val cfg = PipelineConfig(targetDir = out, checkpointDir = tmp("graft-ckpt"),
+      maxFileOpenDuration = 1.second)
+    val stream = MemoryStream[Array[Byte]](9, spark, None)
+    def rec(i: Int) = SampleMessageProto.encode(s"q$i", 1700000000000L + i,
+      if (i % 3 == 0) null else Int.box(i % 7), null)
+    val h = newPipeline(cfg).start(stream.toDF(), SampleMessageProto.codec,
+      DecodeErrorPolicy.FailFast)
+    try {
+      stream.addData((0 until 200).map(rec))
+      h.processAllAvailable()
+      // second batch: valid records around one truncated record
+      stream.addData((200 until 300).map(rec) ++ Seq(Array[Byte](0x0A, 0x7F)) ++
+        (300 until 400).map(rec))
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        h.processAllAvailable()
+      }
+      assert(e.getMessage.contains("undecodable") ||
+        Option(e.getCause).exists(_.getMessage.contains("undecodable")))
+    } finally h.stop()
+
+    // the sink's commit log decides what a reader sees: no file of the
+    // failed batch, all of the first
+    val back = spark.read.parquet(out)
+    assert(back.count() == 200)
+    val got = back.collect().map(r => (r.getAs[String]("query"), r.getAs[Long]("timestamp"),
+      Option(r.getAs[Integer]("page_number")).map(_.intValue),
+      Option(r.getAs[Integer]("result_per_page")))).toSet
+    val want = (0 until 200).map(i => (s"q$i", 1700000000000L + i,
+      if (i % 3 == 0) None else Some(i % 7), None)).toSet
+    assert(got == want)
+  }
 }

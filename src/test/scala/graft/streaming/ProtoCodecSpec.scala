@@ -59,16 +59,20 @@ class ProtoCodecSpec extends AnyFunSuite {
     }
   }
 
-  test("property: random values across the scalar surface roundtrip bit-exactly") {
+  // the scalar surface the property tests draw from
+  private val scalarFields = {
     import ProtoType._
-    import org.scalacheck.Gen
-    import org.scalacheck.rng.Seed
-    val fields = Seq(
+    Seq(
       ProtoField(1, "a_i32", Int32), ProtoField(2, "a_i64", Int64),
       ProtoField(3, "a_s32", SInt32), ProtoField(4, "a_s64", SInt64),
       ProtoField(5, "a_bool", Bool), ProtoField(6, "a_str", PString),
       ProtoField(7, "a_f32", Fixed32), ProtoField(8, "a_f64", Fixed64),
       ProtoField(9, "a_flt", PFloat), ProtoField(10, "a_dbl", PDouble))
+  }
+
+  private def scalarCases(n: Int, seed: Long): Seq[Seq[Any]] = {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
     // hammer varint continuation boundaries (127/128, 2^14±1, …),
     // sign edges, and unicode (incl. surrogate-pair emoji) strings
     val boundary = Gen.oneOf(0L, 1L, 127L, 128L, 16383L, 16384L,
@@ -87,20 +91,113 @@ class ProtoCodecSpec extends AnyFunSuite {
       dbl <- Gen.oneOf(0.0, -0.0, Double.NaN, Double.NegativeInfinity,
         Double.MinPositiveValue, 2.718281828459045)
     } yield Seq(i32, i64, s32, s64, b, str, f32, f64, flt, dbl)
-    val cases = Gen.listOfN(200, genVals)(Gen.Parameters.default, Seed(7L)).get
-    for (vals <- cases) {
-      val back = ProtoWire.decode(fields, ProtoWire.encode(fields, vals)).toSeq
-      (back, vals).zipped.foreach {
-        // NaN != NaN under ==: compare across the bit pattern
-        case (g: Float, w: Float) =>
-          assert(java.lang.Float.floatToRawIntBits(g) ==
-            java.lang.Float.floatToRawIntBits(w))
-        case (g: Double, w: Double) =>
-          assert(java.lang.Double.doubleToRawLongBits(g) ==
-            java.lang.Double.doubleToRawLongBits(w))
-        case (g, w) => assert(g == w, s"got $g want $w in $vals")
-      }
+    Gen.listOfN(n, genVals)(Gen.Parameters.default, Seed(seed)).get
+  }
+
+  private def assertBitExact(back: Seq[Any], vals: Seq[Any]): Unit =
+    back.lazyZip(vals).foreach {
+      // NaN != NaN under ==: compare across the bit pattern
+      case (g: Float, w: Float) =>
+        assert(java.lang.Float.floatToRawIntBits(g) ==
+          java.lang.Float.floatToRawIntBits(w))
+      case (g: Double, w: Double) =>
+        assert(java.lang.Double.doubleToRawLongBits(g) ==
+          java.lang.Double.doubleToRawLongBits(w))
+      case (g, w) => assert(g == w, s"got $g want $w in $vals")
     }
+
+  /** Decode `payloads` through the codec's Spark column, in order. */
+  private def decodeColumn(fields: Seq[ProtoField], payloads: Seq[Array[Byte]])
+      : Array[org.apache.spark.sql.Row] =
+    spark.createDataset(payloads)(org.apache.spark.sql.Encoders.BINARY).toDF("value")
+      .select(ProtoCodec(fields).decode(col("value")).as("r"))
+      .collect().map(_.getAs[org.apache.spark.sql.Row](0))
+
+  test("property: random values across the scalar surface roundtrip bit-exactly") {
+    for (vals <- scalarCases(200, 7L))
+      assertBitExact(ProtoWire.decode(scalarFields, ProtoWire.encode(scalarFields, vals)).toSeq,
+        vals)
+  }
+
+  test("property: the Spark decode column returns the scalar surface bit-exactly") {
+    val cases = scalarCases(200, 11L)
+    val rows = decodeColumn(scalarFields, cases.map(ProtoWire.encode(scalarFields, _)))
+    assert(rows.length == cases.length)
+    rows.toSeq.lazyZip(cases).foreach((r, vals) => assertBitExact(r.toSeq, vals))
+  }
+
+  test("Spark decode column: malformed or null input is null, a bad nested payload nulls the record") {
+    import ProtoType._
+    val good = SampleMessageProto.encode("q", 1L, 2, null)
+    val bad = Seq(
+      good.dropRight(1), // truncated trailing varint
+      hex("0A 7F 68 69"), // declared length overruns the payload
+      hex("0D 01 02 03 04"), // wire-type mismatch on a known field
+      hex("0A 01 68"), // required timestamp missing
+      Array.fill[Byte](11)(-1), // varint > 10 bytes
+      hex("0B")) // group tag
+    val rows = decodeColumn(SampleMessageProto.fields, good +: bad :+ null)
+    assert(rows.head == org.apache.spark.sql.Row("q", 1L, 2, null))
+    assert(rows.tail.forall(_ == null), rows.mkString(", "))
+
+    val inner = Seq(ProtoField(1, "tag", PString, required = true), ProtoField(2, "n", Int64))
+    val fields = Seq(ProtoField(1, "id", Int64, required = true),
+      ProtoField(2, "meta", PMessage(inner)))
+    val ok = ProtoWire.encode(fields, Seq(1L, Seq("t", 5L)))
+    val missingInner = ProtoWire.encode(fields, Seq(1L, Seq(null, 5L)))
+    // nested payload whose inner varint runs off its run end: 0x12 0x02
+    // = field 2 (len 2), then tag(2,varint) and a continuation byte
+    val truncatedInner = hex("08 01 12 02 10 96")
+    val nested = decodeColumn(fields, Seq(ok, missingInner, truncatedInner))
+    assert(nested(0) == org.apache.spark.sql.Row(1L, org.apache.spark.sql.Row("t", 5L)))
+    assert(nested(1) == null && nested(2) == null)
+  }
+
+  test("invalid UTF-8 decodes to the same replacement characters as new String(_, UTF_8)") {
+    val bad = Seq(
+      hex("80"), // lone continuation byte
+      hex("E2 82"), // truncated 3-byte sequence
+      hex("C0 AF"), // overlong encoding of '/'
+      hex("ED A0 80")) // encoded UTF-16 surrogate
+    val payloads = bad.map { b =>
+      val s = Array[Byte](0x61) ++ b ++ Array[Byte](0x62)
+      val out = new java.io.ByteArrayOutputStream()
+      ProtoWire.writeVarint(out, (1L << 3) | 2L); ProtoWire.writeVarint(out, s.length.toLong)
+      out.write(s, 0, s.length)
+      ProtoWire.writeVarint(out, 2L << 3); ProtoWire.writeVarint(out, 1L)
+      (s, out.toByteArray)
+    }
+    val rows = decodeColumn(SampleMessageProto.fields, payloads.map(_._2))
+    payloads.lazyZip(rows).foreach { case ((s, bytes), r) =>
+      val want = new String(s, java.nio.charset.StandardCharsets.UTF_8)
+      assert(want.contains("\uFFFD"))
+      assert(r.getString(0) == want)
+      assert(ProtoWire.decode(SampleMessageProto.fields, bytes)(0) == want)
+    }
+  }
+
+  test("a map of more than 4 entries keeps the LinkedHashMap.toMap entry order") {
+    import ProtoType._
+    val fields = Seq(ProtoField(1, "attrs", PMap(PString, Int64)))
+    val entryFields = Seq(ProtoField(1, "key", PString), ProtoField(2, "value", Int64))
+    // payload order, including a duplicate key (last wins, first position)
+    val entries = Seq("delta" -> 4L, "alpha" -> 1L, "echo" -> 5L, "charlie" -> 3L,
+      "bravo" -> 2L, "alpha" -> 10L, "foxtrot" -> 6L, "golf" -> 7L)
+    val out = new java.io.ByteArrayOutputStream()
+    entries.foreach { case (k, v) =>
+      val e = ProtoWire.encode(entryFields, Seq(k, v))
+      ProtoWire.writeVarint(out, (1L << 3) | 2L); ProtoWire.writeVarint(out, e.length.toLong)
+      out.write(e, 0, e.length)
+    }
+    val lhm = scala.collection.mutable.LinkedHashMap.empty[Any, Any]
+    entries.foreach { case (k, v) => lhm.put(k, v) }
+    val want = lhm.toMap.toSeq
+    val bytes = out.toByteArray
+    assert(ProtoWire.decode(fields, bytes)(0).asInstanceOf[Map[Any, Any]].toSeq == want)
+    val r = spark.createDataset(Seq(bytes))(org.apache.spark.sql.Encoders.BINARY).toDF("value")
+      .select(ProtoCodec(fields).decode(col("value")).as("r"))
+      .select(map_keys(col("r.attrs")), map_values(col("r.attrs"))).head()
+    assert(r.getSeq[String](0).zip(r.getSeq[Long](1)) == want)
   }
 
   test("repeated + nested message fields roundtrip (ProtoWriteSupport transitive shapes)") {
