@@ -11,6 +11,9 @@ import org.apache.spark.sql.SparkSession
   *  - `nanosAsLong`: lets the parquet reader accept TIMESTAMP(NANOS)
   *    columns (see [[Tables]]).
   *  - shuffle partitions sized to the local core count, not 200.
+  *  - checkpoint files on `file:` paths committed by
+  *    [[graft.streaming.LocalCheckpointFileManager]], which starts no
+  *    `chmod`/`readlink` processes; other schemes keep Spark's manager.
   */
 object GraftSession {
   def build(master: String, shufflePartitions: Int): SparkSession = {
@@ -107,6 +110,8 @@ object GraftSession {
       // re-enable it so idle streams still evict state.
       .config("spark.sql.streaming.noDataMicroBatches.enabled",
         sys.env.getOrElse("SPARK_GRAFT_NODATA_BATCHES", "false"))
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[graft.streaming.LocalCheckpointFileManager].getName)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -2,9 +2,13 @@ package graft.streaming
 
 import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
+import org.apache.hadoop.mapreduce.Job
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.OutputWriterFactory
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** The bytes-in → rolling-parquet-out pipeline: the engine's
   * re-expression of the reference's whole dataflow
@@ -99,44 +103,53 @@ final class Pipeline(cfg: PipelineConfig) {
 
     val metrics = new PipelineMetrics(cfg.instanceName)
     spark.streams.addListener(metrics.listener)
+    // a query that fails to start must not leave the listener on the
+    // session, nor a query already started running without a handle
+    var query: StreamingQuery = null
+    try {
+      query = cfg.delivery match {
+        case DeliveryMode.ExactlyOnce =>
+          // observe() counts post-decode rows for the written-records
+          // meter (S15) without an extra action. (Only on the native
+          // path: the sized roller runs auxiliary actions per batch,
+          // which would re-fire the observation and over-count.)
+          startNative(sized.observe("graft_written", count(lit(1)).as("n")))
+        case DeliveryMode.AtLeastOnceSized => startSized(sized, metrics)
+      }
 
-    val query = cfg.delivery match {
-      case DeliveryMode.ExactlyOnce =>
-        // observe() counts post-decode rows for the written-records
-        // meter (S15) without an extra action. (Only on the native
-        // path: the sized roller runs auxiliary actions per batch,
-        // which would re-fire the observation and over-count.)
-        startNative(sized.observe("graft_written", count(lit(1)).as("n")))
-      case DeliveryMode.AtLeastOnceSized => startSized(sized, metrics)
+      // Dead-letter quarantine: a second checkpointed query over the
+      // same source captures the raw bytes of undecodable records (the
+      // upgrade over the reference's fail-stop TODO, KPW:272-277).
+      // Separate query = separate offset tracking; the source is read
+      // twice, which is the standard multi-sink streaming trade-off.
+      val dlQuery = (errorPolicy, cfg.deadLetterDir) match {
+        case (DecodeErrorPolicy.DeadLetter, Some(dlDir)) =>
+          Some(raw
+            .select(col("value"), codec.decode(col("value")).as("r"))
+            .filter(failed)
+            .select(col("value"), current_timestamp().as("quarantined_at"))
+            .writeStream
+            .format("parquet")
+            .option("path", dlDir)
+            .option("checkpointLocation", s"${cfg.checkpointDir}-deadletter")
+            .trigger(Trigger.ProcessingTime(cfg.maxFileOpenDuration.toMillis))
+            .start())
+        case _ => None
+      }
+      // Meter only the main query: a session can run several pipelines
+      // (and this one may run a dead-letter side query over the same
+      // source), so the listener filters progress events by query id.
+      // Registered immediately after start() — progress events are
+      // delivered asynchronously after the first micro-batch commits,
+      // well after this line runs.
+      metrics.track(query.id)
+      new PipelineHandle(query, metrics, spark, dlQuery)
+    } catch {
+      case e: Throwable =>
+        spark.streams.removeListener(metrics.listener)
+        if (query != null) query.stop()
+        throw e
     }
-
-    // Dead-letter quarantine: a second checkpointed query over the
-    // same source captures the raw bytes of undecodable records (the
-    // upgrade over the reference's fail-stop TODO, KPW:272-277).
-    // Separate query = separate offset tracking; the source is read
-    // twice, which is the standard multi-sink streaming trade-off.
-    val dlQuery = (errorPolicy, cfg.deadLetterDir) match {
-      case (DecodeErrorPolicy.DeadLetter, Some(dlDir)) =>
-        Some(raw
-          .select(col("value"), codec.decode(col("value")).as("r"))
-          .filter(failed)
-          .select(col("value"), current_timestamp().as("quarantined_at"))
-          .writeStream
-          .format("parquet")
-          .option("path", dlDir)
-          .option("checkpointLocation", s"${cfg.checkpointDir}-deadletter")
-          .trigger(Trigger.ProcessingTime(cfg.maxFileOpenDuration.toMillis))
-          .start())
-      case _ => None
-    }
-    // Meter only the main query: a session can run several pipelines
-    // (and this one may run a dead-letter side query over the same
-    // source), so the listener filters progress events by query id.
-    // Registered immediately after start() — progress events are
-    // delivered asynchronously after the first micro-batch commits,
-    // well after this line runs.
-    metrics.track(query.id)
-    new PipelineHandle(query, metrics, spark, dlQuery)
   }
 
   /** Native streaming parquet sink (S4/S7/S10): offset WAL + sink
@@ -156,10 +169,10 @@ final class Pipeline(cfg: PipelineConfig) {
   // each micro-batch closes its files at commit regardless.
   private def startNative(df: DataFrame): StreamingQuery =
     df.writeStream
-      .format("parquet")
+      .format(classOf[ParquetSinkFormat].getName)
       .option("path", cfg.targetDir)
       .option("checkpointLocation", cfg.checkpointDir)
-      .option("compression", cfg.compression)
+      .options(parquetOptions)
       .trigger(Trigger.ProcessingTime(cfg.maxFileOpenDuration.toMillis)) // S6
       .partitionBy(partitionCols: _*)
       .start()
@@ -186,15 +199,16 @@ final class Pipeline(cfg: PipelineConfig) {
     df.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val cached = batch.persist()
+        // targetDir's own filesystem: the default one is wrong for a
+        // qualified path on another scheme
+        val dir = new org.apache.hadoop.fs.Path(cfg.targetDir)
+        val fs = dir.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
         try {
           // Files already in targetDir from a previous run (restart
           // from checkpoint) must not feed the bytes/record estimate
           // or the closed-file histogram: claim them before the first
           // write of this run, silently.
           if (primed.compareAndSet(false, true)) {
-            val fs = org.apache.hadoop.fs.FileSystem.get(
-              batch.sparkSession.sparkContext.hadoopConfiguration)
-            val dir = new org.apache.hadoop.fs.Path(cfg.targetDir)
             if (fs.exists(dir)) {
               val it = fs.listFiles(dir, true)
               while (it.hasNext) {
@@ -214,7 +228,7 @@ final class Pipeline(cfg: PipelineConfig) {
           val est = math.max(1L, cfg.maxFileSize / math.max(1L, bytesPerRecord.get()))
           cached.write
             .mode("append")
-            .option("compression", cfg.compression)
+            .options(parquetOptions)
             .option("maxRecordsPerFile", est)
             .partitionBy(partitionCols: _*)
             .parquet(cfg.targetDir)
@@ -228,9 +242,7 @@ final class Pipeline(cfg: PipelineConfig) {
           // aligned with `cumulative`, which also counts only this
           // run — mixing in prior-run bytes would inflate it and
           // shrink files far below maxFileSize after restarts.
-          val fs = org.apache.hadoop.fs.FileSystem.get(
-            batch.sparkSession.sparkContext.hadoopConfiguration)
-          val it = fs.listFiles(new org.apache.hadoop.fs.Path(cfg.targetDir), true)
+          val it = fs.listFiles(dir, true)
           while (it.hasNext) {
             val f = it.next()
             val isNew = f.getPath.getName.endsWith(".parquet") &&
@@ -276,8 +288,30 @@ final class Pipeline(cfg: PipelineConfig) {
       .start()
   }
 
+  /** Parquet writer settings (KPW:476-492); the defaults equal
+    * parquet-mr's own. */
+  private def parquetOptions: Map[String, String] = Map(
+    "compression" -> cfg.compression,
+    "parquet.block.size" -> cfg.parquetBlockSize.toString,
+    "parquet.page.size" -> cfg.parquetPageSize.toString,
+    "parquet.enable.dictionary" -> cfg.dictionaryEnabled.toString)
+
   private def partitionCols: Seq[String] =
     cfg.directoryDateTimePattern.map(_ => "_date").toSeq
+}
+
+/** Parquet with the writer's `parquet.*` options copied into the job
+  * configuration. A batch write merges its options into the Hadoop
+  * configuration; Spark's streaming file sink only hands them to
+  * `prepareWrite`, so without this the exactly-once sink's writers
+  * never see `parquet.block.size` and the like. Reads of its output
+  * are plain parquet. */
+final class ParquetSinkFormat extends ParquetFileFormat {
+  override def prepareWrite(spark: SparkSession, job: Job, options: Map[String, String],
+      dataSchema: StructType): OutputWriterFactory = {
+    for ((k, v) <- options if k.startsWith("parquet.")) job.getConfiguration.set(k, v)
+    super.prepareWrite(spark, job, options, dataSchema)
+  }
 }
 
 /** Running pipeline — `stop()` ≙ reference `close()` (KPW:184-197):

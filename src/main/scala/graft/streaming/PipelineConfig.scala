@@ -84,5 +84,7 @@ object PipelineConfig {
       "maxRecordsPerTrigger must be positive")
     require(c.parquetBlockSize > 0 && c.parquetPageSize > 0,
       "parquet sizes must be positive")
+    require(c.parquetPageSize <= Int.MaxValue, // parquet-mr reads it as an int
+      "parquetPageSize must fit in an int")
   }
 }

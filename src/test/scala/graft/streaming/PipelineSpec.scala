@@ -50,6 +50,8 @@ class PipelineSpec extends AnyFunSuite {
       PipelineConfig("/t", "/c", writerParallelism = 0))
     intercept[IllegalArgumentException](
       PipelineConfig("/t", "/c", maxRecordsPerTrigger = Some(0)))
+    intercept[IllegalArgumentException](
+      PipelineConfig("/t", "/c", parquetPageSize = Int.MaxValue + 1L))
   }
 
   test("golden roundtrip: bytes -> decode -> parquet -> multiset equality") {
@@ -510,5 +512,59 @@ class PipelineSpec extends AnyFunSuite {
     val want = (0 until 200).map(i => (s"q$i", 1700000000000L + i,
       if (i % 3 == 0) None else Some(i % 7), None)).toSet
     assert(got == want)
+  }
+
+  test("parquet writer options reach both sinks: no dictionary pages when dictionaryEnabled = false") {
+    import spark.implicits._
+    def columnChunks(dir: String) = {
+      val conf = spark.sparkContext.hadoopConfiguration
+      new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).toSeq.flatMap { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.toURI), conf))
+        try {
+          import scala.jdk.CollectionConverters._
+          r.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala)
+        } finally r.close()
+      }
+    }
+    def write(delivery: DeliveryMode, dictionary: Boolean, id: Int): String = {
+      val out = tmp("graft-dict")
+      val cfg = PipelineConfig(targetDir = out, checkpointDir = tmp("graft-ckpt"),
+        maxFileOpenDuration = 1.second, delivery = delivery, dictionaryEnabled = dictionary)
+      val stream = MemoryStream[Array[Byte]](id, spark, None)
+      stream.addData((0 until 500).map(jsonBytes))
+      val h = newPipeline(cfg).start(stream.toDF(), JsonCodec(sampleSchema))
+      try h.processAllAvailable() finally h.stop()
+      out
+    }
+    // control: parquet-mr's default writes dictionary pages here
+    assert(columnChunks(write(DeliveryMode.ExactlyOnce, dictionary = true, 23))
+      .exists(_.hasDictionaryPage))
+    for ((delivery, id) <- Seq(DeliveryMode.ExactlyOnce -> 24, DeliveryMode.AtLeastOnceSized -> 25)) {
+      val chunks = columnChunks(write(delivery, dictionary = false, id))
+      assert(chunks.nonEmpty && !chunks.exists(_.hasDictionaryPage),
+        s"$delivery wrote dictionary pages with dictionaryEnabled = false")
+    }
+  }
+
+  test("a pipeline that fails to start leaves no listener and no running query behind") {
+    import spark.implicits._
+    val listeners = spark.streams.listListeners().toSet
+    val notADir = java.nio.file.Files.createTempFile("graft-ckpt-file", "")
+    val stream = MemoryStream[Array[Byte]](26, spark, None)
+    // the main query cannot create its checkpoint
+    intercept[Exception](newPipeline(PipelineConfig(targetDir = tmp("graft-out"),
+      checkpointDir = notADir.toString)).start(stream.toDF(), JsonCodec(sampleSchema)))
+    assert(spark.streams.listListeners().toSet == listeners)
+    // the main query starts, then the dead-letter query cannot
+    val ckpt = tmp("graft-ckpt")
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$ckpt-deadletter"))
+    val active = spark.streams.active.map(_.id).toSet
+    intercept[Exception](newPipeline(PipelineConfig(targetDir = tmp("graft-out"),
+      checkpointDir = ckpt, deadLetterDir = Some(tmp("graft-dl"))))
+      .start(stream.toDF(), JsonCodec(sampleSchema), DecodeErrorPolicy.DeadLetter))
+    assert(spark.streams.listListeners().toSet == listeners)
+    assert(spark.streams.active.map(_.id).toSet == active, "the started main query still runs")
   }
 }

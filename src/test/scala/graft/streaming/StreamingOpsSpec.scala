@@ -477,8 +477,10 @@ class StreamingOpsSpec extends AnyFunSuite {
     assert(commits.nonEmpty, "expected at least one committed batch")
     val last = commits.maxBy(_.getName.toLong)
     assert(last.delete(), s"could not delete commit entry $last")
-    // the local FS keeps a checksum sidecar; a stale one makes the
-    // re-written commit entry fail with FileAlreadyExists
+    // Spark's default manager keeps a checksum sidecar whose stale copy
+    // makes the re-written entry fail with FileAlreadyExists; the
+    // engine's local manager writes none and drops a stale one itself,
+    // so this delete only matters under the default manager
     new java.io.File(last.getParentFile, s".${last.getName}.crc").delete()
     val r2 = run(second)
     // exactly ONE summary row per query ever streamed: the replayed
