@@ -65,8 +65,8 @@ object GraftSession {
       // BASELINE.md §I): q103 3.17 vs 2.71 s, q113 2.98 vs 2.82,
       // q184 2.68 vs 2.90, q219 3.49 vs 3.53 (RocksDB vs HDFS) —
       // within the ±0.5 s host-noise envelope, i.e. the native-store
-      // tax is NOT measurable at gate scale, while the StateProbe
-      // metrics show the structural difference the default buys:
+      // tax is NOT measurable at gate scale, while the per-operator
+      // state metrics show the structural difference the default buys:
       // q219's join state lives in 21 MB of native/disk-bounded
       // RocksDB memory vs 11 MB ON-HEAP (all versions) under HDFS,
       // and changelog commit stays O(batch) (289 ms for a 77 k-put

@@ -89,14 +89,14 @@ object ScaleEvidence {
   }
 
   /** The ×reps salt-perturbed replication of the real documents
-    * corpus (shared with [[MinhashProfile]]): replicas get a
+    * corpus: replicas get a
     * replica-specific salt token spliced after every 4th word, so
     * cross-replica trigram Jaccard lands ~0.25 — below the LSH band
     * threshold. A verbatim ×reps replication would make every replica
     * family an all-pairs clique (quadratic output = wrong evidence);
     * salting keeps the TRUE pair count linear in reps while the
     * candidate join still fights reps× the shingle volume. */
-  private[graft] def saltedCorpus(spark: SparkSession, sfDir: String,
+  private def saltedCorpus(spark: SparkSession, sfDir: String,
       reps: Long): DataFrame =
     Tables(spark, sfDir, "documents")
       .select(col("doc_id"), lower(col("text")).as("text"))

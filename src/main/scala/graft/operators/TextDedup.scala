@@ -59,7 +59,7 @@ object TextDedup {
     *
     * Built by an in-row array transform over the token list, then one
     * explode. Round 1 used posexplode + window lead(); re-measured in
-    * round 2 (ShingleProbe, sf0.1): the window form costs ~3.1 s
+    * round 2 (per-stage timing, sf0.1): the window form costs ~3.1 s
     * (explode to 270 k rows + shuffle + per-doc sort) vs ~0.6 s for
     * the transform form, because the lambda runs over a few hundred
     * in-memory tokens per row and never shuffles.
@@ -69,7 +69,7 @@ object TextDedup {
     * `array_distinct` BEFORE the explode produces the identical
     * relation to the old post-explode `.distinct()` — without the
     * full hash exchange of the pipeline's largest relation.
-    * MinhashProfile at ×100 corpus (32M shingle rows) measured the
+    * A per-stage profile at ×100 corpus (32M shingle rows) measured the
     * post-explode distinct at 112.9 s, the single most expensive
     * stage of the whole near-dup chain; in-row dedup makes shingling
     * a pure map stage with ZERO exchange, fusing it into whichever

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
+import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.hadoop.mapreduce.Job
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -155,9 +155,9 @@ final class Pipeline(cfg: PipelineConfig) {
   /** Native streaming parquet sink (S4/S7/S10): offset WAL + sink
     * commit log give idempotent, reader-atomic file visibility — the
     * engine-side upgrade of the temp-file+rename protocol
-    * (KPW:327-380). File size is capped by record count derived from
-    * the byte cap (parquet-writer feedback refines it in the sized
-    * roller; here a conservative static estimate keeps exactly-once).
+    * (KPW:327-380). Files roll per trigger only: there is no size cap
+    * here, which is why [[PipelineConfig]] rejects `maxFileSize` and
+    * `referenceFileNaming` outside [[DeliveryMode.AtLeastOnceSized]].
     */
   // NOTE on S6 trigger semantics: ProcessingTime batches fire at
   // wall-clock MULTIPLES of the interval (Spark's trigger executor),
@@ -352,7 +352,6 @@ final class PipelineMetrics(instanceName: String) {
     * not report output rows. */
   val writtenRecords = new AtomicLong(0)
   val flushedBatches = new AtomicLong(0)
-  val lastProgressJson = new AtomicReference[String]("")
 
   /** Closed-file sizes (sized-roller mode) — the reference's
     * `parquet.writer.<instance>.flushed-file-size` histogram
@@ -379,7 +378,6 @@ final class PipelineMetrics(instanceName: String) {
       if (observed.containsKey("graft_written"))
         writtenRecords.addAndGet(observed.get("graft_written").getLong(0))
       flushedBatches.incrementAndGet()
-      lastProgressJson.set(e.progress.json)
     }
     override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
   }

@@ -10,7 +10,9 @@ import scala.concurrent.duration._
   *  - `instanceName`            ↔ KPW:641-647 (file-name component)
   *  - `targetDir` non-empty     ↔ KPW:733 validation
   *  - `maxFileSize` ≥ 100 KiB   ↔ KPW:456 (`MIN_ALLOWED_FILE_SIZE`),
-  *    default 1 GiB             ↔ KPW:465
+  *    default 1 GiB             ↔ KPW:465 — honored only by
+  *    `AtLeastOnceSized`; the exactly-once sink has no size cap, so
+  *    a non-default value there is rejected.
   *  - `maxFileOpenDuration`     ↔ KPW:464 (default 900 s) — realized
   *    as the micro-batch trigger interval: a file is never open
   *    longer than one trigger (S6 semantics).
@@ -48,7 +50,7 @@ final case class PipelineConfig(
     delivery: DeliveryMode = DeliveryMode.ExactlyOnce,
     /** Rename finalized files to the reference's
       * `<yyyyMMdd-HHmmssSSS>_<instanceName>_<shardIndex>.parquet`
-      * scheme (KPW:315-320, defaults KPW:489-491). Only honored in
+      * scheme (KPW:315-320, defaults KPW:489-491). Rejected outside
       * [[DeliveryMode.AtLeastOnceSized]]: the exactly-once sink's
       * `_spark_metadata` commit log records file names, so renaming
       * there would desync the log — the same reason the reference
@@ -60,7 +62,7 @@ final case class PipelineConfig(
 sealed trait DeliveryMode
 object DeliveryMode {
   /** Native streaming parquet sink: checkpointed, idempotent commits;
-    * time-based rolling per trigger, record-count file sizing. */
+    * time-based rolling per trigger, no file-size cap. */
   case object ExactlyOnce extends DeliveryMode
   /** foreachBatch roller with adaptive byte-size file caps; replays a
     * failed batch (the reference's duplication window, KPW:43-44). */
@@ -86,5 +88,10 @@ object PipelineConfig {
       "parquet sizes must be positive")
     require(c.parquetPageSize <= Int.MaxValue, // parquet-mr reads it as an int
       "parquetPageSize must fit in an int")
+    val sized = c.delivery == DeliveryMode.AtLeastOnceSized
+    require(sized || c.maxFileSize == DefaultMaxFileSize,
+      s"maxFileSize is only honored by ${DeliveryMode.AtLeastOnceSized}")
+    require(sized || !c.referenceFileNaming,
+      s"referenceFileNaming is only honored by ${DeliveryMode.AtLeastOnceSized}")
   }
 }

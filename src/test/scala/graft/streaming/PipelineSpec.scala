@@ -44,14 +44,24 @@ class PipelineSpec extends AnyFunSuite {
     assert(ok.maxFileSize == 1L << 30)
     intercept[IllegalArgumentException](PipelineConfig("", "/c"))
     intercept[IllegalArgumentException](PipelineConfig("/t", ""))
-    intercept[IllegalArgumentException](
-      PipelineConfig("/t", "/c", maxFileSize = 1024)) // < 100 KiB, KPW:456
+    intercept[IllegalArgumentException](PipelineConfig("/t", "/c", maxFileSize = 1024,
+      delivery = DeliveryMode.AtLeastOnceSized)) // < 100 KiB, KPW:456
     intercept[IllegalArgumentException](
       PipelineConfig("/t", "/c", writerParallelism = 0))
     intercept[IllegalArgumentException](
       PipelineConfig("/t", "/c", maxRecordsPerTrigger = Some(0)))
     intercept[IllegalArgumentException](
       PipelineConfig("/t", "/c", parquetPageSize = Int.MaxValue + 1L))
+    // the exactly-once sink rolls per trigger and names files through
+    // its commit log: options only the sized roller honors fail loudly
+    val capped = intercept[IllegalArgumentException](
+      PipelineConfig("/t", "/c", maxFileSize = 128L << 20))
+    assert(capped.getMessage.contains("maxFileSize"))
+    val named = intercept[IllegalArgumentException](
+      PipelineConfig("/t", "/c", referenceFileNaming = true))
+    assert(named.getMessage.contains("referenceFileNaming"))
+    PipelineConfig("/t", "/c", maxFileSize = 128L << 20, referenceFileNaming = true,
+      delivery = DeliveryMode.AtLeastOnceSized)
   }
 
   test("golden roundtrip: bytes -> decode -> parquet -> multiset equality") {
