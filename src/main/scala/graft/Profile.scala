@@ -68,8 +68,10 @@ object Profile {
     var jobs, stages, tasks, runMs, delayMs, shuffleRead, shuffleWrite, spill, executions, batches = 0L
     var last: Option[QueryExecution] = None
     val planningMs, batchMs = mutable.TreeMap.empty[String, Long].withDefaultValue(0L)
-    /** (query id, operator index) -> (operator, rows, memory bytes, summed commit ms) */
-    val state = mutable.LinkedHashMap.empty[(java.util.UUID, Int), (String, Long, Long, Long)]
+    /** (query id, operator index) -> (operator, memory bytes, summed
+      * commit ms). No row count: GraftSession turns RocksDB's row
+      * tracking off, so the store reports 0 rows for every operator. */
+    val state = mutable.LinkedHashMap.empty[(java.util.UUID, Int), (String, Long, Long)]
 
     def fields: ListMap[String, Any] = synchronized(ListMap(
       "jobs" -> jobs, "stages" -> stages, "tasks" -> tasks,
@@ -78,8 +80,8 @@ object Profile {
       "spill_bytes" -> spill, "executions" -> executions, "planning_ms" -> planningMs,
       "plan" -> last.fold(ListMap.empty[String, Int])(qe => planCounts(qe.executedPlan)),
       "batches" -> batches, "batch_ms" -> batchMs,
-      "state" -> state.values.toSeq.map { case (op, rows, mem, commit) =>
-        ListMap("operator" -> op, "rows" -> rows, "memory_bytes" -> mem, "commit_ms" -> commit)
+      "state" -> state.values.toSeq.map { case (op, mem, commit) =>
+        ListMap("operator" -> op, "memory_bytes" -> mem, "commit_ms" -> commit)
       }))
   }
 
@@ -133,8 +135,8 @@ object Profile {
           r.batches += 1
           p.durationMs.asScala.foreach { case (k, v) => r.batchMs(k) += v }
           p.stateOperators.zipWithIndex.foreach { case (so, i) =>
-            val commit = r.state.get((p.id, i)).fold(0L)(_._4) + so.commitTimeMs
-            r.state((p.id, i)) = (so.operatorName, so.numRowsTotal, so.memoryUsedBytes, commit)
+            val commit = r.state.get((p.id, i)).fold(0L)(_._3) + so.commitTimeMs
+            r.state((p.id, i)) = (so.operatorName, so.memoryUsedBytes, commit)
           }
         }
     }

@@ -17,7 +17,7 @@ object PipelineDemo {
   /** Body shared by `main` and ExamplesSpec: runs against the caller's
     * session and returns the result line. `mode` is "native" (memory
     * stream + one dead-lettered corrupt record), "sized" (size-rolled
-    * at-least-once), or "file" (json-lines file source). */
+    * exactly-once), or "file" (json-lines file source). */
   def run(spark: SparkSession, out: String, ckpt: String, mode: String): String = {
     import spark.implicits._
     val sized = mode == "sized"
@@ -36,7 +36,7 @@ object PipelineDemo {
       maxFileOpenDuration = 1.second,
       directoryDateTimePattern = if (sized) None else Some("yyyy-MM-dd"),
       deadLetterDir = Some(s"$out-deadletter"),
-      delivery = if (sized) DeliveryMode.AtLeastOnceSized else DeliveryMode.ExactlyOnce)
+      delivery = if (sized) DeliveryMode.ExactlyOnceSized else DeliveryMode.ExactlyOnce)
 
     val pipe = new Pipeline(cfg)
     val n = if (sized) 30000 else 1000

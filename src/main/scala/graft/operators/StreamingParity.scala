@@ -776,8 +776,8 @@ object StreamingParity {
     // the streaming plan holds NO state store and NO watermark at
     // all (each query's probes, hits and summary live inside the one
     // batch that carried it), so state on an unbounded stream is
-    // O(batch), not O(total-queries-ever); StreamScaleEvidence's
-    // q237 shape measures exactly that at 10M streamed vectors. At
+    // O(batch), not O(total-queries-ever); SCALE.md "Streaming state
+    // at 100×" records that measured at 10M streamed vectors. At
     // 100 TB: the index side is the standing corpus (stored bucketed
     // on `bucket` for an exchange-free static side — pinned in
     // StreamingOpsSpec), each micro-batch costs O(batch × probes)

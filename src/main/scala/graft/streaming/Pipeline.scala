@@ -1,11 +1,15 @@
 package graft.streaming
 
+import java.time.{Instant, ZoneOffset}
+import java.time.format.DateTimeFormatter
 import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.hadoop.mapreduce.Job
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.OutputWriterFactory
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -114,7 +118,7 @@ final class Pipeline(cfg: PipelineConfig) {
           // path: the sized roller runs auxiliary actions per batch,
           // which would re-fire the observation and over-count.)
           startNative(sized.observe("graft_written", count(lit(1)).as("n")))
-        case DeliveryMode.AtLeastOnceSized => startSized(sized, metrics)
+        case DeliveryMode.ExactlyOnceSized => startSized(sized, metrics)
       }
 
       // Dead-letter quarantine: a second checkpointed query over the
@@ -157,7 +161,7 @@ final class Pipeline(cfg: PipelineConfig) {
     * engine-side upgrade of the temp-file+rename protocol
     * (KPW:327-380). Files roll per trigger only: there is no size cap
     * here, which is why [[PipelineConfig]] rejects `maxFileSize` and
-    * `referenceFileNaming` outside [[DeliveryMode.AtLeastOnceSized]].
+    * `referenceFileNaming` outside [[DeliveryMode.ExactlyOnceSized]].
     */
   // NOTE on S6 trigger semantics: ProcessingTime batches fire at
   // wall-clock MULTIPLES of the interval (Spark's trigger executor),
@@ -177,115 +181,110 @@ final class Pipeline(cfg: PipelineConfig) {
       .partitionBy(partitionCols: _*)
       .start()
 
-  /** Size-capped roller (S5): per batch, measure written bytes vs
-    * records and adapt `maxRecordsPerFile` so steady-state file size
-    * approaches `maxFileSize` (the reference checks size after each
-    * record, KPW:282-286/308-310; a micro-batch engine can only cap
-    * per-file record counts, so the cap converges over batches).
-    * foreachBatch ⇒ at-least-once on retry, like the reference.
+  /** Size-capped roller (S5), exactly-once per batch id. It adapts
+    * `maxRecordsPerFile` from measured bytes/record so files converge
+    * on `maxFileSize` (the reference checks size after each record,
+    * KPW:282-286/308-310; a micro-batch engine can only cap records).
+    *
+    * Each batch commits through `targetDir/_staging/<query id>/<batchId>`,
+    * the reference's finalize-then-rename (KPW:327-354) made idempotent.
+    * The query id is the checkpoint's (kept on restart, new with a new
+    * checkpoint), so runs and pipelines sharing `targetDir` stay apart.
+    *  1. delete this query's `<k>` for `k < batchId` (committed);
+    *  2. unless `<batchId>` holds the roller's marker (not `_SUCCESS`,
+    *     which `mapreduce.fileoutputcommitter.marksuccessfuljobs` can
+    *     switch off), delete it, write the batch into it, and create the
+    *     marker `_STAGED_<records>_<staged bytes>`;
+    *  3. move each staged `.parquet` file into its partition directory,
+    *     under the KPW name with `referenceFileNaming` (S9); a failed
+    *     rename fails the batch;
+    *  4. add the marker's figures to run-wide totals, whose ratio is the
+    *     next batch's bytes/record.
+    * A replay rewrites an unmarked staging directory or finishes the
+    * moves of a marked one, so nothing lands twice; readers skip
+    * `_`-prefixed directories; nothing lists `targetDir` itself.
+    *
+    * Spark 4.1.2's streaming file sink would honour a fixed record cap
+    * (`FileStreamSink` passes its options to `FileFormatWriter.write`,
+    * which reads `maxRecordsPerFile`), but a fixed count cannot hold a
+    * byte band and its `_spark_metadata` log rules out S9 naming.
     */
   private def startSized(df: DataFrame, metrics: PipelineMetrics): StreamingQuery = {
-    // bytes/record estimate: 0 = not yet calibrated. Refined after
-    // every batch from actual on-disk bytes; before the first write
-    // it is seeded from a JSON-serialized sample of the batch — an
-    // overestimate of parquet+compression size, so the first batch's
-    // files land UNDER the cap rather than over it (a fixed prior
-    // undershoots wide records and breaches maxFileSize).
-    val bytesPerRecord = new AtomicLong(0)
-    val totalRecords = new AtomicLong(0)
-    val runBytes = new AtomicLong(0)
-    val seenFiles = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val primed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    // bytes/record, 0 until the first batch seeds it from a JSON sample
+    // (an overestimate, so its files land UNDER the cap; a fixed prior
+    // breaches it on wide records), then run-wide totals: one small
+    // batch's file overhead must not shrink the next batch's files.
+    val bytesPerRecord, runRecords, runBytes = new AtomicLong(0)
     df.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val cached = batch.persist()
-        // targetDir's own filesystem: the default one is wrong for a
-        // qualified path on another scheme
-        val dir = new org.apache.hadoop.fs.Path(cfg.targetDir)
-        val fs = dir.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-        try {
-          // Files already in targetDir from a previous run (restart
-          // from checkpoint) must not feed the bytes/record estimate
-          // or the closed-file histogram: claim them before the first
-          // write of this run, silently.
-          if (primed.compareAndSet(false, true)) {
-            if (fs.exists(dir)) {
-              val it = fs.listFiles(dir, true)
-              while (it.hasNext) {
-                val f = it.next()
-                if (f.getPath.getName.endsWith(".parquet"))
-                  seenFiles.add(f.getPath.toString)
-              }
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val sc = batch.sparkSession.sparkContext
+        val dir = new Path(cfg.targetDir) // on its own filesystem, not the default one
+        val fs = dir.getFileSystem(sc.hadoopConfiguration)
+        val ours = new Path(new Path(dir, "_staging"), sc.getLocalProperty(StreamExecution.QUERY_ID_KEY))
+        val staging = fs.makeQualified(new Path(ours, batchId.toString))
+        if (fs.exists(ours))
+          for (s <- fs.listStatus(ours) if s.getPath.getName.toLongOption.exists(_ < batchId))
+            fs.delete(s.getPath, true)
+        // listStatus: a located local status runs `ls` without libhadoop
+        def staged(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq.flatMap(s =>
+          if (s.isDirectory) staged(s.getPath) else Seq(s).filter(_.getPath.getName.endsWith(".parquet")))
+        // a staged file's partition directories, re-rooted at targetDir
+        def target(p: Path): Path = if (p.depth == staging.depth) dir else new Path(target(p.getParent), p.getName)
+        val marked = Option(fs.globStatus(new Path(staging, "_STAGED_*"))).toSeq.flatten
+          .map(_.getPath.getName.split('_').drop(2).map(_.toLong)).headOption
+        // a marked batch is a replay: its files are written, finish the moves
+        val (files, records, bytes) = marked.fold {
+          fs.delete(staging, true)
+          val cached = batch.persist()
+          try {
+            if (bytesPerRecord.get() == 0L) {
+              val sample = cached.limit(500)
+                .select(octet_length(to_json(struct(cached.columns.map(col).toIndexedSeq: _*))).as("b"))
+                .agg(avg(col("b"))).collect().head
+              val jsonAvg = if (sample.isNullAt(0)) 256.0 else sample.getDouble(0)
+              bytesPerRecord.set(math.max(1L, math.ceil(jsonAvg).toLong))
             }
-          }
-          if (bytesPerRecord.get() == 0L) {
-            val sample = cached.limit(500)
-              .select(octet_length(to_json(struct(cached.columns.map(col).toIndexedSeq: _*))).as("b"))
-              .agg(avg(col("b"))).collect().head
-            val jsonAvg = if (sample.isNullAt(0)) 256.0 else sample.getDouble(0)
-            bytesPerRecord.set(math.max(1L, math.ceil(jsonAvg).toLong))
-          }
-          val est = math.max(1L, cfg.maxFileSize / math.max(1L, bytesPerRecord.get()))
-          cached.write
-            .mode("append")
-            .options(parquetOptions)
-            .option("maxRecordsPerFile", est)
-            .partitionBy(partitionCols: _*)
-            .parquet(cfg.targetDir)
-          val written = cached.count() // from cache — no source re-read
-          metrics.writtenRecords.addAndGet(written)
-          val cumulative = totalRecords.addAndGet(written)
-          // feedback: actual bytes/record from files written BY THIS
-          // RUN (O(#files) listing — never a data re-read), plus the
-          // reference's closed-file-size histogram (KPW:144,339-344).
-          // Restricting to this run's files keeps the estimate
-          // aligned with `cumulative`, which also counts only this
-          // run — mixing in prior-run bytes would inflate it and
-          // shrink files far below maxFileSize after restarts.
-          val it = fs.listFiles(dir, true)
-          while (it.hasNext) {
-            val f = it.next()
-            val isNew = f.getPath.getName.endsWith(".parquet") &&
-              !seenFiles.contains(f.getPath.toString)
-            if (isNew) {
-              // S9 exact naming (KPW:315-320): a just-finalized file is
-              // renamed `<formatted-now>_<instance>_<shard>.parquet`;
-              // shard = the writing task's index from Spark's part
-              // number (the reference's thread index, KPW:93-94). The
-              // rename happens AFTER the batch's write completed, so a
-              // reader's view is always a complete file under either
-              // name — the same finalize-then-rename window as the
-              // reference's temp-file protocol (KPW:327-354).
-              val path =
-                if (cfg.referenceFileNaming &&
-                    f.getPath.getName.startsWith("part-")) {
-                  val shard = f.getPath.getName.split("-")(1).toInt
-                  val fmt = java.time.format.DateTimeFormatter
-                    .ofPattern("yyyyMMdd-HHmmssSSS")
-                    .withZone(java.time.ZoneOffset.UTC)
-                  var ts = java.time.Instant.now()
-                  var target = new org.apache.hadoop.fs.Path(f.getPath.getParent,
-                    s"${fmt.format(ts)}_${cfg.instanceName}_$shard.parquet")
-                  while (fs.exists(target)) { // same-shard same-ms file
-                    ts = ts.plusMillis(1)
-                    target = new org.apache.hadoop.fs.Path(f.getPath.getParent,
-                      s"${fmt.format(ts)}_${cfg.instanceName}_$shard.parquet")
-                  }
-                  fs.rename(f.getPath, target)
-                  target.toString
-                } else f.getPath.toString
-              seenFiles.add(path)
-              runBytes.addAndGet(f.getLen)
-              metrics.recordClosedFile(f.getLen)
-            }
-          }
-          if (cumulative > 0)
-            bytesPerRecord.set(math.max(1L, runBytes.get() / cumulative))
-        } finally cached.unpersist()
+            cached.write
+              .options(parquetOptions)
+              .option("maxRecordsPerFile", math.max(1L, cfg.maxFileSize / bytesPerRecord.get()))
+              .partitionBy(partitionCols: _*)
+              .parquet(staging.toString)
+            val files = staged(staging)
+            val (n, b) = (cached.count(), files.map(_.getLen).sum) // count from cache
+            fs.create(new Path(staging, s"_STAGED_${n}_$b")).close() // an empty file: never torn
+            (files, n, b)
+          } finally cached.unpersist()
+        } { case Array(n, b) => (staged(staging), n, b) }
+
+        for (f <- files) {
+          val into = target(f.getPath.getParent)
+          fs.mkdirs(into)
+          val to = if (cfg.referenceFileNaming) kpwName(fs, into, f.getPath.getName)
+            else new Path(into, f.getPath.getName)
+          if (!fs.rename(f.getPath, to))
+            throw new java.io.IOException(s"could not move ${f.getPath} to $to")
+          metrics.recordClosedFile(f.getLen)
+        }
+        metrics.writtenRecords.addAndGet(records)
+        runBytes.addAndGet(bytes)
+        if (runRecords.addAndGet(records) > 0)
+          bytesPerRecord.set(math.max(1L, runBytes.get() / runRecords.get()))
       }
       .option("checkpointLocation", cfg.checkpointDir)
       .trigger(Trigger.ProcessingTime(cfg.maxFileOpenDuration.toMillis))
       .start()
+  }
+
+  /** S9 exact naming (KPW:315-320): `<formatted-now>_<instance>_<shard>
+    * .parquet`, shard = the writing task's index from Spark's part
+    * number (the reference's thread index, KPW:93-94); a same-shard
+    * same-millisecond file moves the time on by one millisecond. */
+  private def kpwName(fs: FileSystem, into: Path, part: String): Path = {
+    val shard = part.split("-")(1).toInt
+    val fmt = DateTimeFormatter.ofPattern("yyyyMMdd-HHmmssSSS").withZone(ZoneOffset.UTC)
+    Iterator.iterate(Instant.now())(_.plusMillis(1))
+      .map(ts => new Path(into, s"${fmt.format(ts)}_${cfg.instanceName}_$shard.parquet"))
+      .find(!fs.exists(_)).get
   }
 
   /** Parquet writer settings (KPW:476-492); the defaults equal

@@ -11,8 +11,8 @@ import scala.concurrent.duration._
   *  - `targetDir` non-empty     ↔ KPW:733 validation
   *  - `maxFileSize` ≥ 100 KiB   ↔ KPW:456 (`MIN_ALLOWED_FILE_SIZE`),
   *    default 1 GiB             ↔ KPW:465 — honored only by
-  *    `AtLeastOnceSized`; the exactly-once sink has no size cap, so
-  *    a non-default value there is rejected.
+  *    `ExactlyOnceSized`; the native sink has no size cap, so a
+  *    non-default value there is rejected.
   *  - `maxFileOpenDuration`     ↔ KPW:464 (default 900 s) — realized
   *    as the micro-batch trigger interval: a file is never open
   *    longer than one trigger (S6 semantics).
@@ -26,12 +26,12 @@ import scala.concurrent.duration._
   *  - parquet knobs             ↔ ParquetFile.java:42-51 /
   *    KPW:476-492 (block size, page size, codec, dictionary).
   *
-  * Unlike the reference, delivery semantics are selectable:
-  * `ExactlyOnce` uses Spark's native file sink (offset WAL + sink
-  * commit log — strictly stronger than the reference's at-least-once,
-  * SURVEY §2.1 S10), while `AtLeastOnceSized` uses a byte-size-capped
-  * custom roller in `foreachBatch` that matches the reference's
-  * size-rolling accuracy at the reference's delivery level.
+  * Both delivery modes are exactly-once, strictly stronger than the
+  * reference's at-least-once (SURVEY §2.1 S10): `ExactlyOnce` uses
+  * Spark's native file sink (offset WAL + sink commit log), while
+  * `ExactlyOnceSized` uses a byte-size-capped roller in `foreachBatch`
+  * that matches the reference's size-rolling accuracy and commits each
+  * batch idempotently through a staging directory keyed by batch id.
   */
 final case class PipelineConfig(
     targetDir: String,
@@ -51,7 +51,7 @@ final case class PipelineConfig(
     /** Rename finalized files to the reference's
       * `<yyyyMMdd-HHmmssSSS>_<instanceName>_<shardIndex>.parquet`
       * scheme (KPW:315-320, defaults KPW:489-491). Rejected outside
-      * [[DeliveryMode.AtLeastOnceSized]]: the exactly-once sink's
+      * [[DeliveryMode.ExactlyOnceSized]]: the native sink's
       * `_spark_metadata` commit log records file names, so renaming
       * there would desync the log — the same reason the reference
       * only names files it owns the commit protocol for. */
@@ -64,9 +64,10 @@ object DeliveryMode {
   /** Native streaming parquet sink: checkpointed, idempotent commits;
     * time-based rolling per trigger, no file-size cap. */
   case object ExactlyOnce extends DeliveryMode
-  /** foreachBatch roller with adaptive byte-size file caps; replays a
-    * failed batch (the reference's duplication window, KPW:43-44). */
-  case object AtLeastOnceSized extends DeliveryMode
+  /** foreachBatch roller with adaptive byte-size file caps; a replayed
+    * batch id finishes or redoes its own staged commit, so it closes
+    * the reference's duplication window (KPW:43-44). */
+  case object ExactlyOnceSized extends DeliveryMode
 }
 
 object PipelineConfig {
@@ -88,10 +89,10 @@ object PipelineConfig {
       "parquet sizes must be positive")
     require(c.parquetPageSize <= Int.MaxValue, // parquet-mr reads it as an int
       "parquetPageSize must fit in an int")
-    val sized = c.delivery == DeliveryMode.AtLeastOnceSized
+    val sized = c.delivery == DeliveryMode.ExactlyOnceSized
     require(sized || c.maxFileSize == DefaultMaxFileSize,
-      s"maxFileSize is only honored by ${DeliveryMode.AtLeastOnceSized}")
+      s"maxFileSize is only honored by ${DeliveryMode.ExactlyOnceSized}")
     require(sized || !c.referenceFileNaming,
-      s"referenceFileNaming is only honored by ${DeliveryMode.AtLeastOnceSized}")
+      s"referenceFileNaming is only honored by ${DeliveryMode.ExactlyOnceSized}")
   }
 }

@@ -56,6 +56,11 @@ class ProfileSpec extends AnyFunSuite {
     val batchMs = warm184.getStruct(warm184.fieldIndex("batch_ms"))
     Seq("addBatch", "walCommit").foreach(p =>
       assert(!batchMs.isNullAt(batchMs.fieldIndex(p)), s"no $p phase"))
-    assert(warm184.getSeq[AnyRef](warm184.fieldIndex("state")).nonEmpty)
+    val state = warm184.getSeq[org.apache.spark.sql.Row](warm184.fieldIndex("state"))
+    assert(state.nonEmpty)
+    // RocksDB row tracking is off (GraftSession): a row count would read 0
+    state.foreach { s =>
+      assert(s.schema.fieldNames.toSet == Set("operator", "memory_bytes", "commit_ms"), s"state entry: $s")
+    }
   }
 }

@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Property-based pipeline tests (SURVEY §5.2): roundtrip invariance
   * under generated records (seeded scalacheck generators → exact
-  * reproducibility), and the at-least-once rolling invariant.
+  * reproducibility), and the rolling invariant: every record lands
+  * exactly once.
   */
 class PipelinePropertySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -119,7 +120,7 @@ class PipelinePropertySpec extends AnyFunSuite {
       checkpointDir = Files.createTempDirectory("graft-roll-ck").toString,
       maxFileSize = 100L * 1024,
       maxFileOpenDuration = scala.concurrent.duration.Duration(1, "s"),
-      delivery = DeliveryMode.AtLeastOnceSized)
+      delivery = DeliveryMode.ExactlyOnceSized)
     streamId += 1
     val stream = MemoryStream[Array[Byte]](streamId, spark, None)
     val n = 3000
@@ -132,7 +133,7 @@ class PipelinePropertySpec extends AnyFunSuite {
 
     val back = spark.read.schema(schema).parquet(out)
     assert(back.select("query").distinct().count() == n)
-    assert(back.count() >= n)
+    assert(back.count() == n)
     val files = new java.io.File(out).listFiles()
       .count(f => f.isFile && f.getName.endsWith(".parquet"))
     assert(files >= 1 && files <= n, s"unreasonable file count $files")
