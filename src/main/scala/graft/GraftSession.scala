@@ -6,14 +6,20 @@ import org.apache.spark.sql.SparkSession
   * run with identical semantics.
   *
   *  - UTC session timezone (oracle parity).
-  *  - AQE on: runtime shuffle coalescing + skew-join splitting — the
-  *    behaviors that keep these plans healthy at 100 TB.
+  *  - AQE on for batch queries: runtime shuffle coalescing + skew-join
+  *    splitting — the behaviors that keep these plans healthy at 100 TB.
   *  - `nanosAsLong`: lets the parquet reader accept TIMESTAMP(NANOS)
   *    columns (see [[Tables]]).
   *  - shuffle partitions sized to the local core count, not 200.
   *  - checkpoint files on `file:` paths committed by
   *    [[graft.streaming.LocalCheckpointFileManager]], which starts no
   *    `chmod`/`readlink` processes; other schemes keep Spark's manager.
+  *  - `file:` bound to [[graft.streaming.NioLocalFileSystem]], so the
+  *    files the sinks write start no `chmod` processes either.
+  *  - stateless streaming micro-batches planned without AQE, as one
+  *    job: AQE would run each stage as its own job with a re-plan in
+  *    between, a fixed cost per micro-batch. Batch queries keep AQE, and
+  *    Spark already plans stateful micro-batches without it.
   */
 object GraftSession {
   def build(master: String, shufflePartitions: Int): SparkSession = {
@@ -25,6 +31,7 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.streaming.stateless.enabled", "false")
       // NOTE: adaptive.coalescePartitions.initialPartitionNum is left
       // at its default (= shuffle.partitions). A 4× value was measured
       // here and REJECTED: at bench scale it cost ~30% wall-clock
@@ -112,6 +119,7 @@ object GraftSession {
         sys.env.getOrElse("SPARK_GRAFT_NODATA_BATCHES", "false"))
       .config("spark.sql.streaming.checkpointFileManagerClass",
         classOf[graft.streaming.LocalCheckpointFileManager].getName)
+      .config("spark.hadoop.fs.file.impl", classOf[graft.streaming.NioLocalFileSystem].getName)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

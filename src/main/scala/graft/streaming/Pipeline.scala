@@ -65,7 +65,16 @@ final class Pipeline(cfg: PipelineConfig) {
   def start(raw: DataFrame, codec: RecordCodec,
       errorPolicy: DecodeErrorPolicy = DecodeErrorPolicy.FailFast): PipelineHandle = {
     val spark = raw.sparkSession
-    val decoded0 = raw.select(codec.decode(col("value")).as("r"))
+    // S12: writer fan-out, at most writerParallelism files per trigger.
+    // The raw bytes are hash-sharded before decode, as the reference
+    // hands raw records to its writer threads (KPW:217-294): a hash
+    // partitioning depends only on the row, so Spark adds no sort
+    // before it (a round-robin one needs that sort to be retry-safe),
+    // each file keeps its source partition's arrival order, and the
+    // shuffle carries the smaller encoded record. Decode then runs on
+    // the writer tasks; identical payloads share a writer.
+    val sharded = raw.select(col("value")).repartition(cfg.writerParallelism, col("value"))
+    val decoded0 = sharded.select(codec.decode(col("value")).as("r"))
     // Codec contract: null struct iff undecodable. Parsing codecs use
     // a PERMISSIVE corrupt-record column internally, so a valid
     // record whose fields are all null is NOT treated as a failure.
@@ -94,17 +103,6 @@ final class Pipeline(cfg: PipelineConfig) {
       case None => decoded
     }
 
-    // S12: writer fan-out — files per trigger = writerParallelism.
-    // The exchange stays AFTER decode, so decode runs on the source's
-    // tasks, not on writerParallelism tasks. Both orders were probed
-    // on 4 vCPUs with SampleMessage records: exchange-first drained
-    // ~11% faster with one 100k-record source file per batch (decode
-    // spread over 4 writer tasks instead of 1 source task), but with
-    // 4 source files of 50k per batch and writerParallelism 1 it
-    // drained 281-325k rec/s against 278-349k for decode-first, all
-    // decode then landing on the single writer task.
-    val sized = withDate.repartition(cfg.writerParallelism)
-
     val metrics = new PipelineMetrics(cfg.instanceName)
     spark.streams.addListener(metrics.listener)
     // a query that fails to start must not leave the listener on the
@@ -117,8 +115,8 @@ final class Pipeline(cfg: PipelineConfig) {
           // meter (S15) without an extra action. (Only on the native
           // path: the sized roller runs auxiliary actions per batch,
           // which would re-fire the observation and over-count.)
-          startNative(sized.observe("graft_written", count(lit(1)).as("n")))
-        case DeliveryMode.ExactlyOnceSized => startSized(sized, metrics)
+          startNative(withDate.observe("graft_written", count(lit(1)).as("n")))
+        case DeliveryMode.ExactlyOnceSized => startSized(withDate, metrics)
       }
 
       // Dead-letter quarantine: a second checkpointed query over the
@@ -171,7 +169,22 @@ final class Pipeline(cfg: PipelineConfig) {
   // first record). Deployments that care should set
   // maxFileOpenDuration to their latency budget, not the roll cap;
   // each micro-batch closes its files at commit regardless.
-  private def startNative(df: DataFrame): StreamingQuery =
+  // A new checkpoint numbers its batches from 0 again, and
+  // `FileStreamSink` skips every batch id that `targetDir`'s
+  // `_spark_metadata` log already holds: such a start would silently
+  // drop data, so it is refused. Restarts on the same checkpoint pass.
+  private def startNative(df: DataFrame): StreamingQuery = {
+    val conf = df.sparkSession.sessionState.newHadoopConf()
+    def holdsBatch(dir: String): Boolean = {
+      val p = new Path(dir)
+      val fs = p.getFileSystem(conf)
+      fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.split('.').head.toLongOption.isDefined)
+    }
+    if (!holdsBatch(s"${cfg.checkpointDir}/offsets") && holdsBatch(s"${cfg.targetDir}/_spark_metadata"))
+      throw new IllegalStateException(s"targetDir ${cfg.targetDir} holds a sink log (_spark_metadata), " +
+        s"but checkpointDir ${cfg.checkpointDir} holds no batch: the sink would skip " +
+        "the batch ids that log records and drop their data. Restart on the checkpoint that wrote " +
+        "targetDir, or write to a new targetDir.")
     df.writeStream
       .format(classOf[ParquetSinkFormat].getName)
       .option("path", cfg.targetDir)
@@ -180,6 +193,7 @@ final class Pipeline(cfg: PipelineConfig) {
       .trigger(Trigger.ProcessingTime(cfg.maxFileOpenDuration.toMillis)) // S6
       .partitionBy(partitionCols: _*)
       .start()
+  }
 
   /** Size-capped roller (S5), exactly-once per batch id. It adapts
     * `maxRecordsPerFile` from measured bytes/record so files converge

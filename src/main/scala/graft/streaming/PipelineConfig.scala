@@ -19,7 +19,8 @@ import scala.concurrent.duration._
   *  - `directoryDateTimePattern`↔ KPW:105-108, KPW:706-712 — realized
   *    as a `partitionBy` on a date-formatted column.
   *  - `writerParallelism`       ↔ `threadCount`, KPW:460 — realized
-  *    as sink-side repartition (files per trigger).
+  *    as hash-sharded raw records, at most N files per trigger;
+  *    identical payloads share a writer.
   *  - `maxRecordsPerTrigger`    ↔ backpressure bound
   *    `maxQueuedRecordsInConsumer`, KPW:471 — realized as the
   *    source's `maxOffsetsPerTrigger`-style rate cap.
@@ -31,7 +32,8 @@ import scala.concurrent.duration._
   * Spark's native file sink (offset WAL + sink commit log), while
   * `ExactlyOnceSized` uses a byte-size-capped roller in `foreachBatch`
   * that matches the reference's size-rolling accuracy and commits each
-  * batch idempotently through a staging directory keyed by batch id.
+  * batch idempotently through a staging directory keyed by query id and
+  * batch id.
   */
 final case class PipelineConfig(
     targetDir: String,

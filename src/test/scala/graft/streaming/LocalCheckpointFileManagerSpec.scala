@@ -18,11 +18,14 @@ import scala.jdk.CollectionConverters._
 
 /** The fork-free local checkpoint commit path: the file protocol
   * `HDFSMetadataLog` relies on (no-clobber, cancel, replace), restart
-  * from a checkpoint written by Spark's default manager, and a JFR
-  * guard that micro-batches start no processes. */
+  * from a checkpoint written by Spark's default manager, and JFR
+  * guards that micro-batches start no processes, neither for the
+  * checkpoint nor for the files the sink writes. */
 class LocalCheckpointFileManagerSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val conf = new Configuration()
+  // the session's: a plain configuration opened first would leave
+  // Hadoop's own `file:` filesystem in its per-scheme cache
+  private lazy val conf = spark.sessionState.newHadoopConf()
   private val managerKey = "spark.sql.streaming.checkpointFileManagerClass"
 
   private def tmpDir(prefix: String) = Files.createTempDirectory(prefix)
@@ -118,19 +121,23 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     assert(back.select("query").distinct().count() == 600)
   }
 
-  test("JFR guard: micro-batches after the first start no processes on the stream thread") {
+  /** (thread, stack) of each `jdk.ProcessStart` event while three
+    * micro-batches run after the first, plus one control start on this
+    * thread. */
+  private def processStarts(streamId: Int, writerParallelism: Int): Seq[(String, String)] = {
     val dump = Files.createTempFile("graft-lcfm", ".jfr")
     import spark.implicits._
-    val stream = MemoryStream[Array[Byte]](872, spark, None)
+    val stream = MemoryStream[Array[Byte]](streamId, spark, None)
     val h = new Pipeline(PipelineConfig(targetDir = tmpDir("graft-lcfm-jfr-out").toString,
       checkpointDir = tmpDir("graft-lcfm-jfr-ckpt").toString,
-      maxFileOpenDuration = 100.millis)).start(stream.toDF(), JsonCodec(schema))
+      maxFileOpenDuration = 100.millis, writerParallelism = writerParallelism))
+      .start(stream.toDF(), JsonCodec(schema))
     val rec = new jdk.jfr.Recording()
     try {
       stream.addData((0 until 100).map(json))
       h.processAllAvailable() // start-up and the first batch may mkdirs
       val first = h.query.lastProgress.batchId
-      rec.enable("jdk.ProcessStart")
+      rec.enable("jdk.ProcessStart").withStackTrace()
       rec.start()
       // positive control: the recording does see a process start
       new ProcessBuilder("true").start().waitFor()
@@ -142,12 +149,28 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
       rec.dump(dump)
       assert(h.query.lastProgress.batchId >= first + 3)
     } finally { rec.close(); h.stop() }
-    val threads = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala
-      .map(e => Option(e.getThread).map(_.getJavaName).getOrElse(""))
+    val events = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toSeq
     Files.delete(dump)
+    val threads = events.map(e => Option(e.getThread).map(_.getJavaName).getOrElse(""))
     assert(threads.contains(Thread.currentThread.getName), "the recording saw no process start")
-    val fromStream = threads.count(_.startsWith("stream execution thread"))
+    threads.zip(events.map(e => Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala.take(25))
+      .map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}").mkString("\n    ")))
+  }
+
+  test("JFR guard: micro-batches after the first start no processes on the stream thread") {
+    val fromStream = processStarts(872, writerParallelism = 1).count(_._1.startsWith("stream execution thread"))
     assert(fromStream == 0, s"$fromStream process starts on the stream thread")
+  }
+
+  test("JFR guard: exactly-once micro-batches with two writers start no processes on any thread") {
+    val local = FileSystem.get(URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+    assert(local.isInstanceOf[NioLocalFileSystem], s"file: is served by ${local.getClass}")
+    // not the pipeline's: a garbage-collected session of an earlier
+    // query removes its artifact directory with `rm -rf`
+    val starts = processStarts(873, writerParallelism = 2)
+      .filter { case (thread, stack) => thread != Thread.currentThread.getName &&
+        !stack.contains("ArtifactManager$StateCleanupRunner") }
+    assert(starts.isEmpty, s"process starts beside the control:\n${starts.mkString("\n")}")
   }
 }
 

@@ -10,6 +10,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 
 /** Reference-parity pipeline tests — the engine's version of the
   * golden-roundtrip suite (KafkaProtoParquetWriterTest.java:112-227):
@@ -488,15 +489,16 @@ class PipelineSpec extends AnyFunSuite {
     assert(back.filter(col("query") === "b42" && col("timestamp") === 42L).count() == 1)
   }
 
-  test("proto decode plans as the native ProtoDecode below the single writer exchange") {
+  test("ingest plans one hash exchange over the raw bytes, ProtoDecode above it, and no AQE") {
     import spark.implicits._
-    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, ScalaUDF}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.graftbridge.Bridge
     val cfg = PipelineConfig(targetDir = tmp("graft-plan"), checkpointDir = tmp("graft-ckpt"),
-      maxFileOpenDuration = 1.second)
+      maxFileOpenDuration = 1.second, writerParallelism = 3)
     val stream = MemoryStream[Array[Byte]](8, spark, None)
     stream.addData((0 until 50).map(i => SampleMessageProto.encode(s"q$i", i.toLong, i, null)))
     val h = newPipeline(cfg).start(stream.toDF(), SampleMessageProto.codec)
@@ -504,21 +506,89 @@ class PipelineSpec extends AnyFunSuite {
       h.processAllAvailable()
       Bridge.lastMicroBatchPlan(h.query).getOrElse(fail("no micro-batch executed"))
     } finally h.stop()
-    // AdaptiveSparkPlanExec / QueryStageExec are leaves to TreeNode.collect
-    def flatten(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec => Seq(q.plan)
-      case o => o.children
-    }).flatMap(flatten)
     def decodes(p: SparkPlan) =
       p.expressions.exists(_.exists(_.isInstanceOf[ProtoDecode]))
-    val nodes = flatten(plan)
-    val exchanges = nodes.collect { case e: ShuffleExchangeExec => e }
+    assert(plan.collect { case a: AdaptiveSparkPlanExec => a }.isEmpty,
+      s"the stateless micro-batch was planned adaptively:\n$plan")
+    val exchanges = plan.collect { case e: ShuffleExchangeExec => e }
     assert(exchanges.length == 1, s"expected one writer exchange in:\n$plan")
-    assert(flatten(exchanges.head.child).exists(decodes),
-      s"ProtoDecode is not below the writer exchange in:\n$plan")
-    assert(!nodes.exists(_.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF]))),
+    exchanges.head.outputPartitioning match {
+      case HashPartitioning(Seq(a: Attribute), n) =>
+        assert(a.name == "value" && n == cfg.writerParallelism, s"in:\n$plan")
+      case other => fail(s"the writer exchange is $other, not a hash of value, in:\n$plan")
+    }
+    assert(plan.exists(decodes) && !exchanges.head.child.exists(decodes),
+      s"ProtoDecode is not above the writer exchange in:\n$plan")
+    assert(!plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF]))),
       s"a ScalaUDF is left on the decode path in:\n$plan")
+  }
+
+  test("each ingest micro-batch runs as one job") {
+    import spark.implicits._
+    import org.apache.spark.graftbridge.CoreBridge
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(StreamExecution.QUERY_ID_KEY)))
+          .foreach(jobs.add)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val stream = MemoryStream[Array[Byte]](27, spark, None)
+    val h = newPipeline(PipelineConfig(targetDir = tmp("graft-jobs"), checkpointDir = tmp("graft-ckpt"),
+      maxFileOpenDuration = 100.millis, writerParallelism = 4)).start(stream.toDF(), SampleMessageProto.codec)
+    val batches = try {
+      for (b <- 0 until 3) {
+        stream.addData((b * 1000 until (b + 1) * 1000).map(i => SampleMessageProto.encode(s"q$i", i.toLong, i, null)))
+        h.processAllAvailable()
+      }
+      h.query.recentProgress.count(_.numInputRows > 0)
+    } finally { h.stop(); CoreBridge.drainListenerBus(spark.sparkContext); spark.sparkContext.removeSparkListener(listener) }
+    assert(batches == 3)
+    val ours = jobs.asScala.count(_ == h.query.id.toString)
+    assert(ours == batches, s"$ours jobs for $batches micro-batches")
+  }
+
+  test("four writers split one batch evenly, and each file keeps arrival order") {
+    import spark.implicits._
+    val out = tmp("graft-shard")
+    val stream = MemoryStream[Array[Byte]](28, spark, None)
+    stream.addData((0 until 40000).map(jsonBytes)) // timestamps increase with i
+    val h = newPipeline(PipelineConfig(targetDir = out, checkpointDir = tmp("graft-ckpt"),
+      maxFileOpenDuration = 1.second, writerParallelism = 4)).start(stream.toDF(), JsonCodec(sampleSchema))
+    try h.processAllAvailable() finally h.stop()
+    val files = new java.io.File(out).listFiles().filter(_.getName.endsWith(".parquet")).toSeq
+    assert(files.length == 4)
+    val perFile = files.map(f => spark.read.schema(sampleSchema).parquet(f.toString)
+      .select("timestamp").as[Long].collect().toSeq)
+    assert(perFile.map(_.length).sum == 40000)
+    for (ts <- perFile) {
+      assert(math.abs(ts.length - 10000) <= 500, s"a writer got ${ts.length} of 40,000 rows")
+      assert(ts.sliding(2).forall { case Seq(a, b) => a < b }, "a file is out of arrival order")
+    }
+  }
+
+  test("a new checkpoint over a targetDir another exactly-once run wrote fails at start") {
+    import spark.implicits._
+    val out = tmp("graft-reuse")
+    val (first, second) = (tmp("graft-ckpt"), tmp("graft-ckpt"))
+    val stream = MemoryStream[Array[Byte]](29, spark, None)
+    def cfg(ckpt: String) = PipelineConfig(targetDir = out, checkpointDir = ckpt,
+      maxFileOpenDuration = 100.millis)
+    stream.addData((0 until 1000).map(jsonBytes))
+    val h1 = newPipeline(cfg(first)).start(stream.toDF(), JsonCodec(sampleSchema))
+    try h1.processAllAvailable() finally h1.stop()
+    val listeners = spark.streams.listListeners().toSet
+    stream.addData((1000 until 2000).map(jsonBytes))
+    val e = intercept[IllegalStateException](
+      newPipeline(cfg(second)).start(stream.toDF(), JsonCodec(sampleSchema)))
+    assert(e.getMessage.contains(out) && e.getMessage.contains(second), e.getMessage)
+    assert(spark.streams.listListeners().toSet == listeners)
+    // the checkpoint that wrote targetDir still resumes
+    val h2 = newPipeline(cfg(first)).start(stream.toDF(), JsonCodec(sampleSchema))
+    try h2.processAllAvailable() finally h2.stop()
+    assert(spark.read.schema(sampleSchema).parquet(out).count() == 2000)
   }
 
   test("FailFast mid-stream: a reader of targetDir sees exactly the batches before the bad one") {
