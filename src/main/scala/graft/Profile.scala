@@ -65,7 +65,8 @@ object Profile {
     * (shared, streams) write it, so every update holds its lock. */
   final class RunStats {
     var seconds = 0.0
-    var jobs, stages, tasks, runMs, delayMs, shuffleRead, shuffleWrite, spill, executions, batches = 0L
+    var jobs, stages, tasks, runMs, deserializeMs, delayMs, shuffleRead, shuffleWrite, spill,
+      executions, batches = 0L
     var last: Option[QueryExecution] = None
     val planningMs, batchMs = mutable.TreeMap.empty[String, Long].withDefaultValue(0L)
     /** (query id, operator index) -> (operator, memory bytes, summed
@@ -75,7 +76,8 @@ object Profile {
 
     def fields: ListMap[String, Any] = synchronized(ListMap(
       "jobs" -> jobs, "stages" -> stages, "tasks" -> tasks,
-      "executor_run_ms" -> runMs, "scheduler_delay_ms" -> delayMs,
+      "executor_run_ms" -> runMs, "task_deserialize_ms" -> deserializeMs,
+      "scheduler_delay_ms" -> delayMs,
       "shuffle_read_bytes" -> shuffleRead, "shuffle_write_bytes" -> shuffleWrite,
       "spill_bytes" -> spill, "executions" -> executions, "planning_ms" -> planningMs,
       "plan" -> last.fold(ListMap.empty[String, Int])(qe => planCounts(qe.executedPlan)),
@@ -106,6 +108,7 @@ object Profile {
         val (m, i) = (e.taskMetrics, e.taskInfo)
         if (m != null) {
           r.runMs += m.executorRunTime
+          r.deserializeMs += m.executorDeserializeTime
           r.delayMs += math.max(0L, i.duration - m.executorRunTime -
             m.executorDeserializeTime - m.resultSerializationTime -
             (if (i.gettingResult) i.finishTime - i.gettingResultTime else 0L))

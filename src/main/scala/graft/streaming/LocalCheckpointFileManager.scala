@@ -26,7 +26,13 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * Hadoop `FileSystem`, which starts no processes for them.
   *
   * Every other scheme goes to the manager Spark itself would create,
-  * so HDFS and object-store commit semantics are unchanged.
+  * so HDFS and object-store commit semantics are unchanged, including
+  * one that `file:` does not share: when a no-overwrite commit loses to
+  * an existing file, Spark's managers throw Hadoop's
+  * `FileAlreadyExistsException` and leave the loser's
+  * `.<name>.<uuid>.tmp` beside the winner (the stream is terminated by
+  * then, so its `cancel()` does not remove it). The metadata logs skip
+  * such files when they list batches; they stay until removed by hand.
   */
 final class LocalCheckpointFileManager(path: Path, conf: Configuration)
     extends CheckpointFileManager {

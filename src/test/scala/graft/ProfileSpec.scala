@@ -38,6 +38,10 @@ class ProfileSpec extends AnyFunSuite {
 
     val warm01 = q01.getStruct(q01.fieldIndex("warm"))
     assert(warm01.getAs[Long]("jobs") >= 1 && warm01.getAs[Long]("tasks") >= 1)
+    Seq("cold", "warm").foreach { run =>
+      val stats = q01.getStruct(q01.fieldIndex(run))
+      assert(stats.getAs[Long]("task_deserialize_ms") > 0, s"$run: no task deserialization time")
+    }
     val phases = warm01.getStruct(warm01.fieldIndex("planning_ms"))
     Seq("analysis", "optimization", "planning").foreach(p =>
       assert(!phases.isNullAt(phases.fieldIndex(p)), s"no $p phase"))

@@ -71,21 +71,38 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     finally in.close()
   }
 
+  /** The local filesystem as `graftmock:`, a scheme Spark commits to. */
+  private def mockConf = {
+    val c = new Configuration()
+    c.set("fs.graftmock.impl", classOf[RenameCountingFs].getName)
+    c.setBoolean("fs.graftmock.impl.disable.cache", true)
+    c
+  }
+
   test("file: paths are committed here; other schemes by Spark's own manager") {
     val viaSpark = CheckpointFileManager.create(new Path("file:///tmp"),
       spark.sessionState.newHadoopConf())
     assert(viaSpark.isInstanceOf[LocalCheckpointFileManager] && viaSpark.isLocal)
     // a scheme without an AbstractFileSystem binding: Spark falls back
     // to its FileSystem-based manager, which renames through the FS
-    val mockConf = new Configuration()
-    mockConf.set("fs.graftmock.impl", classOf[RenameCountingFs].getName)
-    mockConf.setBoolean("fs.graftmock.impl.disable.cache", true)
     val dir = tmpDir("graft-lcfm-mock")
     val p = new Path(s"graftmock://${dir.toUri.getPath}/0")
     val before = RenameCountingFs.renames.get
     write(new LocalCheckpointFileManager(p.getParent, mockConf), p, "x", overwrite = false)
     assert(RenameCountingFs.renames.get == before + 1)
     assert(new String(Files.readAllBytes(dir.resolve("0")), UTF_8) == "x")
+  }
+
+  test("on another scheme a no-overwrite collision keeps the original and leaves the loser's temp file") {
+    val dir = tmpDir("graft-lcfm-mock-clash")
+    val p = new Path(s"graftmock://${dir.toUri.getPath}/0")
+    val fm = new LocalCheckpointFileManager(p.getParent, mockConf)
+    write(fm, p, "first", overwrite = false)
+    intercept[FileAlreadyExistsException](write(fm, p, "second", overwrite = false))
+    assert(new String(Files.readAllBytes(dir.resolve("0")), UTF_8) == "first")
+    val left = names(dir) - "0"
+    assert(left.size == 1 && left.head.matches("""\.0\.[-0-9a-f]+\.tmp"""), s"left: $left")
+    assert(new String(Files.readAllBytes(dir.resolve(left.head)), UTF_8) == "second")
   }
 
   private val schema = StructType(Seq(StructField("query", StringType),
