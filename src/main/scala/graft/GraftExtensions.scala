@@ -19,7 +19,10 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *    `levenshtein(a,b) <= d` predicates;
   *  - the [[graft.plans.TopKPerGroupStrategy]] planner strategy, which
   *    plans the native two-phase [[graft.plans.TopKPerGroupExec]] for
-  *    [[graft.plans.TopKPerGroupLogical]] nodes.
+  *    [[graft.plans.TopKPerGroupLogical]] nodes;
+  *  - the [[graft.plans.WriterFanOutStrategy]] planner strategy, which
+  *    plans [[graft.plans.WriterFanOut]] nodes as the shuffle-free
+  *    [[graft.plans.WriterFanOutExec]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -27,6 +30,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectPlannerStrategy(session => graft.plans.TopKPerGroupStrategy(
       session.conf.get("graft.topk.partialMaxGroups", (1 << 20).toString).toInt))
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    e.injectPlannerStrategy(_ => graft.plans.WriterFanOutStrategy)
     e.injectFunction((
       FunctionIdentifier("vec_dot"),
       new ExpressionInfo(classOf[FloatVecDot].getName, "vec_dot"),

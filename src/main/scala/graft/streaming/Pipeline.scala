@@ -4,6 +4,8 @@ import java.time.{Instant, ZoneOffset}
 import java.time.format.DateTimeFormatter
 import java.util.concurrent.atomic.AtomicLong
 
+import graft.plans.WriterFanOut
+
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.hadoop.mapreduce.Job
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -34,14 +36,21 @@ final class Pipeline(cfg: PipelineConfig) {
     * exact shape the Kafka source yields.
     */
   def kafkaSource(spark: SparkSession, bootstrapServers: String, topic: String,
-      options: Map[String, String] = Map.empty): DataFrame = {
-    val r = spark.readStream.format("kafka")
-      .option("kafka.bootstrap.servers", bootstrapServers)
-      .option("subscribe", topic)
-    val withCap = cfg.maxRecordsPerTrigger // S13 backpressure
-      .fold(r)(n => r.option("maxOffsetsPerTrigger", n.toString))
-    options.foldLeft(withCap) { case (b, (k, v)) => b.option(k, v) }
-      .load()
+      options: Map[String, String] = Map.empty): DataFrame =
+    spark.readStream.format("kafka").options(kafkaOptions(bootstrapServers, topic, options)).load()
+
+  /** The Kafka source's options; the caller's `options` win. At least
+    * `writerParallelism` source partitions per batch (`minPartitions`)
+    * keep the writer fan-out a coalesce, so no writer fetches an
+    * offset range another writer fetches too. */
+  private[streaming] def kafkaOptions(bootstrapServers: String, topic: String,
+      options: Map[String, String]): Map[String, String] = {
+    val defaults = Map(
+      "kafka.bootstrap.servers" -> bootstrapServers,
+      "subscribe" -> topic,
+      "minPartitions" -> cfg.writerParallelism.toString) ++
+      cfg.maxRecordsPerTrigger.map(n => "maxOffsetsPerTrigger" -> n.toString) // S13 backpressure
+    defaults.filter { case (k, _) => !options.keys.exists(_.equalsIgnoreCase(k)) } ++ options
   }
 
   /** File-based streaming source with the same `value: binary` shape
@@ -66,14 +75,13 @@ final class Pipeline(cfg: PipelineConfig) {
       errorPolicy: DecodeErrorPolicy = DecodeErrorPolicy.FailFast): PipelineHandle = {
     val spark = raw.sparkSession
     // S12: writer fan-out, at most writerParallelism files per trigger.
-    // The raw bytes are hash-sharded before decode, as the reference
-    // hands raw records to its writer threads (KPW:217-294): a hash
-    // partitioning depends only on the row, so Spark adds no sort
-    // before it (a round-robin one needs that sort to be retry-safe),
-    // each file keeps its source partition's arrival order, and the
-    // shuffle carries the smaller encoded record. Decode then runs on
-    // the writer tasks; identical payloads share a writer.
-    val sharded = raw.select(col("value")).repartition(cfg.writerParallelism, col("value"))
+    // The raw bytes reach the writers without a shuffle, as the
+    // reference hands raw records straight to its writer threads
+    // (KPW:217-294): WriterFanOut coalesces the source partitions, or
+    // splits each between several writers, in the same stage, and each
+    // file keeps its source partition's arrival order. Decode runs on
+    // the writer tasks.
+    val sharded = WriterFanOut.of(raw.select(col("value")), cfg.writerParallelism)
     val decoded0 = sharded.select(codec.decode(col("value")).as("r"))
     // Codec contract: null struct iff undecodable. Parsing codecs use
     // a PERMISSIVE corrupt-record column internally, so a valid

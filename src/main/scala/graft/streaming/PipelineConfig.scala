@@ -19,8 +19,11 @@ import scala.concurrent.duration._
   *  - `directoryDateTimePattern`↔ KPW:105-108, KPW:706-712 — realized
   *    as a `partitionBy` on a date-formatted column.
   *  - `writerParallelism`       ↔ `threadCount`, KPW:460 — realized
-  *    as hash-sharded raw records, at most N files per trigger;
-  *    identical payloads share a writer.
+  *    as a shuffle-free fan-out of the raw records to N writer tasks
+  *    (`graft.plans.WriterFanOut`), at most N files per trigger: more
+  *    source partitions than writers are coalesced, fewer are split
+  *    record by record, and each file keeps arrival order. The Kafka
+  *    source asks for at least N partitions (`minPartitions`).
   *  - `maxRecordsPerTrigger`    ↔ backpressure bound
   *    `maxQueuedRecordsInConsumer`, KPW:471 — realized as the
   *    source's `maxOffsetsPerTrigger`-style rate cap.

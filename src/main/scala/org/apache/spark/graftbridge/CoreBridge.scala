@@ -3,11 +3,10 @@ package org.apache.spark.graftbridge
 import org.apache.spark.SparkContext
 
 /** Core-side analogue of [[org.apache.spark.sql.graftbridge.Bridge]]:
-  * `SparkContext.listenerBus` is `private[spark]`, so measurement
-  * harnesses that read listener-fed aggregates expose the drain from a
-  * child package of `org.apache.spark` (the standard extension
-  * technique; nothing here touches scheduler internals beyond the
-  * public `waitUntilEmpty`).
+  * `SparkContext.listenerBus` and `RDD.outputDeterministicLevel` are
+  * `private[spark]`, so they are exposed from a child package of
+  * `org.apache.spark` (the standard extension technique; nothing here
+  * touches scheduler internals beyond the public `waitUntilEmpty`).
   */
 object CoreBridge {
 
@@ -20,4 +19,9 @@ object CoreBridge {
   def drainListenerBus(sc: SparkContext, timeoutMillis: Long = 30000L): Unit =
     try sc.listenerBus.waitUntilEmpty(timeoutMillis)
     catch { case _: java.util.concurrent.TimeoutException => () }
+
+  /** Whether a re-read of `rdd`'s partitions gives the same rows
+    * (`RDD.outputDeterministicLevel` is `private[spark]`). */
+  def outputDeterministicLevel(rdd: org.apache.spark.rdd.RDD[_]): org.apache.spark.rdd.DeterministicLevel.Value =
+    rdd.outputDeterministicLevel
 }

@@ -489,10 +489,10 @@ class PipelineSpec extends AnyFunSuite {
     assert(back.filter(col("query") === "b42" && col("timestamp") === 42L).count() == 1)
   }
 
-  test("ingest plans one hash exchange over the raw bytes, ProtoDecode above it, and no AQE") {
+  test("ingest plans one writer fan-out over the raw bytes, ProtoDecode above it, and no exchange or AQE") {
     import spark.implicits._
-    import org.apache.spark.sql.catalyst.expressions.{Attribute, ScalaUDF}
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import graft.plans.WriterFanOutExec
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -510,15 +510,13 @@ class PipelineSpec extends AnyFunSuite {
       p.expressions.exists(_.exists(_.isInstanceOf[ProtoDecode]))
     assert(plan.collect { case a: AdaptiveSparkPlanExec => a }.isEmpty,
       s"the stateless micro-batch was planned adaptively:\n$plan")
-    val exchanges = plan.collect { case e: ShuffleExchangeExec => e }
-    assert(exchanges.length == 1, s"expected one writer exchange in:\n$plan")
-    exchanges.head.outputPartitioning match {
-      case HashPartitioning(Seq(a: Attribute), n) =>
-        assert(a.name == "value" && n == cfg.writerParallelism, s"in:\n$plan")
-      case other => fail(s"the writer exchange is $other, not a hash of value, in:\n$plan")
-    }
-    assert(plan.exists(decodes) && !exchanges.head.child.exists(decodes),
-      s"ProtoDecode is not above the writer exchange in:\n$plan")
+    assert(plan.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+      s"the micro-batch shuffles in:\n$plan")
+    val fanOuts = plan.collect { case f: WriterFanOutExec => f }
+    assert(fanOuts.length == 1, s"expected one writer fan-out in:\n$plan")
+    assert(fanOuts.head.outputPartitioning.numPartitions == cfg.writerParallelism, s"in:\n$plan")
+    assert(plan.exists(decodes) && !fanOuts.head.child.exists(decodes),
+      s"ProtoDecode is not above the writer fan-out in:\n$plan")
     assert(!plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF]))),
       s"a ScalaUDF is left on the decode path in:\n$plan")
   }
@@ -567,6 +565,61 @@ class PipelineSpec extends AnyFunSuite {
       assert(math.abs(ts.length - 10000) <= 500, s"a writer got ${ts.length} of 40,000 rows")
       assert(ts.sliding(2).forall { case Seq(a, b) => a < b }, "a file is out of arrival order")
     }
+  }
+
+  test("one source partition split over four writers counts each input record once") {
+    import spark.implicits._
+    import org.apache.spark.graftbridge.CoreBridge
+    val stream = MemoryStream[Array[Byte]](30, spark, None) // one partition per addData
+    val h = newPipeline(PipelineConfig(targetDir = tmp("graft-count"), checkpointDir = tmp("graft-ckpt"),
+      maxFileOpenDuration = 100.millis, writerParallelism = 4)).start(stream.toDF(), JsonCodec(sampleSchema))
+    val sizes = Seq(1000, 2500, 7)
+    val inputRows = try {
+      for ((n, b) <- sizes.zipWithIndex) {
+        stream.addData((b * 10000 until b * 10000 + n).map(jsonBytes))
+        h.processAllAvailable()
+      }
+      h.query.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq
+    } finally { h.stop(); CoreBridge.drainListenerBus(spark.sparkContext) }
+    assert(inputRows == sizes.map(_.toLong), "numInputRows per batch")
+    assert(h.metrics.receivedRecords.get() == sizes.sum)
+    assert(h.metrics.writtenRecords.get() == sizes.sum)
+  }
+
+  test("six source partitions coalesce onto two writers: no exchange, every row once") {
+    import spark.implicits._
+    import graft.plans.WriterFanOutExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.graftbridge.Bridge
+    val out = tmp("graft-coalesce")
+    val stream = MemoryStream[Array[Byte]](31, spark, Some(6))
+    val h = newPipeline(PipelineConfig(targetDir = out, checkpointDir = tmp("graft-ckpt"),
+      maxFileOpenDuration = 100.millis, writerParallelism = 2)).start(stream.toDF(), JsonCodec(sampleSchema))
+    def files() = new java.io.File(out).listFiles().count(_.getName.endsWith(".parquet"))
+    val (perTrigger, plan) = try {
+      val counts = for (b <- 0 until 3) yield {
+        val before = files()
+        stream.addData((b * 1000 until (b + 1) * 1000).map(jsonBytes))
+        h.processAllAvailable()
+        files() - before
+      }
+      (counts, Bridge.lastMicroBatchPlan(h.query).getOrElse(fail("no micro-batch executed")))
+    } finally h.stop()
+    assert(perTrigger.forall(n => n >= 1 && n <= 2), s"files per trigger: $perTrigger")
+    assert(plan.collect { case e: ShuffleExchangeExec => e }.isEmpty, s"the micro-batch shuffles in:\n$plan")
+    assert(plan.collect { case f: WriterFanOutExec => f }.length == 1, s"in:\n$plan")
+    val got = spark.read.schema(sampleSchema).parquet(out).select("query").as[String].collect().toSeq
+    assert(got.sorted == (0 until 3000).map(i => s"q$i").sorted, "rows lost or duplicated")
+  }
+
+  test("kafkaSource asks for one source partition per writer unless the caller sets minPartitions") {
+    val p = newPipeline(PipelineConfig("/t", "/c", writerParallelism = 4, maxRecordsPerTrigger = Some(500)))
+    assert(p.kafkaOptions("broker:9092", "events", Map.empty) == Map(
+      "kafka.bootstrap.servers" -> "broker:9092", "subscribe" -> "events",
+      "minPartitions" -> "4", "maxOffsetsPerTrigger" -> "500"))
+    val own = p.kafkaOptions("broker:9092", "events", Map("minpartitions" -> "16", "startingOffsets" -> "earliest"))
+    assert(own.get("minpartitions").contains("16") && !own.contains("minPartitions"))
+    assert(own.get("startingOffsets").contains("earliest"))
   }
 
   test("a new checkpoint over a targetDir another exactly-once run wrote fails at start") {
